@@ -24,8 +24,8 @@ A single warm-up action runs first so JVM/codegen startup cost isn't
 attributed to the first query.
 
 Sampling protocol (round 8+): each query runs TWICE back-to-back and
-reports the MIN of the two samples — the same protocol as
-``tools/bench_scale3.py``. Single samples in a shared
+reports the MIN of the two samples — the same protocol as the
+scale sweep recorded in ``BENCH_SCALE3.json``. Single samples in a shared
 multi-hundred-query JVM swing ±10-20% with whole-stage-codegen/JIT
 placement and host drift (round 7 measured 392.7 vs 354.1 s for
 identical code), which made every round-over-round per-query diff
@@ -489,8 +489,7 @@ def main() -> None:
                  "(plain vs AQE skew-join vs salted_join on a hot-key "
                  "lineitem variant, result-neutrality asserted, three "
                  "aggregate shapes — join-only skew, same-key algebraic, "
-                 "same-key non-combinable) lives in BENCH_SKEW.json "
-                 "(tools/bench_skew.py)",
+                 "same-key non-combinable) lives in BENCH_SKEW.json",
     }
     try:
         with open(detail_path, "w") as fh:

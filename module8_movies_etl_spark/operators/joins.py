@@ -163,7 +163,7 @@ def salted_join(
     the *aggregation* that typically follows, and works when the skew
     is known ahead of time (the 100 TB planned-pipeline case).
 
-    MEASURED (tools/bench_skew.py, sf1.0 hot-key fact, round 10):
+    MEASURED (BENCH_SKEW.json, sf1.0 hot-key fact, round 10):
     when the downstream aggregate is keyed ON the join key, its
     required hash distribution pins the join's output partitioning
     and AQE's skew split cannot fire at all (skew_split_fired=false)

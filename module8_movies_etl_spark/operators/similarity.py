@@ -949,7 +949,7 @@ def _ann_candidate_pairs(
     decontamination where an uncovered probe simply has no hit).
     Inputs must already be ``_prep_side``-projected. This set is the
     alignment's DRIVING VOLUME — every pair here is exact-rescored —
-    so ``tools/bench_scale3.py`` counts it directly.
+    so the scale sweep in ``BENCH_SCALE3.json`` counts it directly.
 
     Band geometry (bits per band, extraction mask) is derived HERE
     from (n_planes, n_bands) — callers cannot pass a disagreeing
@@ -1131,8 +1131,8 @@ def bipartite_align_ann(
     hold expected bucket occupancy constant, so the cap's truncation
     (the only recall cost) stays rare. Time scales with the CANDIDATE
     count (``bipartite_align_scored_pairs``), not the k-bounded
-    output — that is the driving volume ``tools/bench_scale3.py``
-    measures.
+    output — that is the driving volume the scale sweep in
+    ``BENCH_SCALE3.json`` measures.
     """
     # Zero-norm vectors have no cosine direction: they can neither be
     # aligned nor serve as a match. Drop them BEFORE banding so they

@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TPCH_TABLES = (
@@ -55,40 +54,8 @@ def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic benchmark table from a scale-factor dir.
-
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark
-    rejects outright (PARQUET_TYPE_ILLEGAL). The portable fix — safe
-    under ANY caller-provided session, including the driver's — is the
-    ``nanosAsLong`` legacy read path plus an integer ns→µs conversion
-    (the data is µs-aligned, so this is lossless). Integer division
-    avoids the double-precision trap (ns epochs exceed 2^53).
-
-    The legacy conf is consulted at schema-resolution time (DataFrame
-    creation), so it is saved and RESTORED around the read — setting it
-    session-wide would silently change nanos decoding for every later
-    read in a caller-owned session. NOT thread-safe: a concurrent read
-    in the same session during the set/restore window would see the
-    legacy decoding. Fine for this single-driver harness; if the
-    session is ever shared across threads, serialize calls or read
-    events under a dedicated session.
-    """
-    if name == "events":
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    """Read one synthetic benchmark table from a scale-factor dir."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -13,6 +13,7 @@ batch ``exact_dedup`` operator's job; this one serves the ingest path).
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +25,15 @@ from .windows import (
 )
 
 _SINK_SEQ = itertools.count()
+
+# Declared stream types of the events columns a dedup key can name.
+_EVENT_TYPES = {
+    "event_id": "bigint",
+    "user_id": "bigint",
+    "event_type": "string",
+    "value": "double",
+    "props": "string",
+}
 
 
 def dedup_stream(
@@ -58,26 +68,13 @@ def run_dedup_over_events(
     oracle. Production callers pass a short delay and accept
     re-emission past the horizon.
     """
-    from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
-
     keys = keys or ["user_id", "event_type"]
-    # The file-stream source needs a DIRECTORY (events.parquet is a
-    # single file), and a vanilla session (inferTimestampNTZ on)
-    # infers parquet timestamps as TIMESTAMP_NTZ, which watermarks
-    # reject — so snapshot the needed columns to scratch and declare
-    # ts as TIMESTAMP (decodes the same micros; same trick as
-    # streaming.stateful).
-    scratch = mkscratch("stream_dedup_")
-    register(scratch)
-    batch = read_table(spark, sf_dir, "events").select(
-        *keys, F.col("ts").cast("timestamp").alias("ts")
+    schema = ", ".join(f"{k} {_EVENT_TYPES[k]}" for k in keys)
+    stream = read_event_stream(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        schema=f"{schema}, ts timestamp",
     )
-    batch.coalesce(1).write.mode("overwrite").parquet(scratch)
-    # batch.schema already carries ts as TIMESTAMP (the cast), so use
-    # it as the declared stream schema — re-inference over the INT96
-    # parquet output would flip it back to NTZ under a vanilla session.
-    stream = read_event_stream(spark, scratch, schema=batch.schema)
     deduped = dedup_stream(stream, keys, delay=delay)
     # Stateful streams commit one state-store partition per shuffle
     # partition per micro-batch; a default-conf session (200) spends

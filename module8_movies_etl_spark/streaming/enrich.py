@@ -17,6 +17,7 @@ oracle (same replay discipline as ``streaming.dedup``).
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,22 +59,15 @@ def run_enrich_over_events(
     every event whose user maps to a customer key.
     """
     from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
 
-    # Same scratch/NTZ discipline as streaming.dedup: the file stream
-    # needs a directory, and ts must be TIMESTAMP (not NTZ) even
-    # though this stateless join never inspects it.
-    scratch = mkscratch("stream_enrich_")
-    register(scratch)
-    batch = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.col("value").cast("double").alias("value"),
-        F.col("ts").cast("timestamp").alias("ts"),
+    # A plain stateless join: no watermark, so ts is not read.
+    stream = read_event_stream(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        schema=(
+            "event_id bigint, user_id bigint, event_type string, value double"
+        ),
     )
-    batch.coalesce(1).write.mode("overwrite").parquet(scratch)
-    stream = read_event_stream(spark, scratch, schema=batch.schema)
 
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),

@@ -51,13 +51,18 @@ this is a beyond-reference capability required by the north star.
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import scoped_shuffle_partitions
+from .windows import (
+    read_event_stream,
+    run_to_memory,
+    scoped_shuffle_partitions,
+)
 
 SESSION_OUT_SCHEMA = (
     "user_id bigint, session_start_s bigint, session_end_s bigint, n_events bigint"
@@ -150,64 +155,40 @@ _SINK_SEQ = __import__("itertools").count()
 
 
 
-def _replay_events_stream(spark, sf_dir, select_cols, schema, transform, prefix, query_name):
+def _replay_events_stream(spark, sf_dir, schema, transform, query_name):
     """Shared finite-replay mechanics for every custom stateful
-    operator runner (sessionize / KMV / CMS): rewrite the events
-    table once to a µs-timestamp single-file scratch copy, stream it
-    with an EXPLICIT schema, run ``transform``'s stateful plan to
-    completion with availableNow into a memory sink, and return the
-    materialized table.
+    operator runner (sessionize / KMV / CMS): stream the events table
+    where it lives with the declared ``schema``, run ``transform``'s
+    stateful plan to completion with availableNow into a memory sink,
+    and return the materialized table.
 
     Why each piece is the way it is (fixes here apply to ALL
     runners — that is the point of sharing them):
 
-    - The raw file is TIMESTAMP(NANOS) parquet, which the batch
-      reader shims per-read (readers.read_table) — but a streaming
-      source re-resolves the file on every micro-batch, so the
-      save/restore shim would race the stream; hence the one-time
-      scratch rewrite.
-    - ``coalesce(1)`` keeps replay to ONE data micro-batch: with a
-      0-second watermark, a multi-batch replay would drop any event
-      that sorts behind an earlier batch's maximum as late data —
-      single-batch replay is what makes the finite-input result
-      equal the batch twin (the production posture for live data is
-      a real watermark delay, not 0 seconds).
-    - Explicit ``schema``: a vanilla session (inferTimestampNTZ on)
-      would infer the rewritten column as TIMESTAMP_NTZ, which
-      watermarks reject — the declared TIMESTAMP type decodes the
-      same micros.
-    - ``scoped_shuffle_partitions(32)``: a stateful stream
+    - Declared ``schema``: it names only the columns the operator
+      reads, and ``ts timestamp`` reads the table's NTZ footer as
+      TIMESTAMP under any session — a vanilla session
+      (inferTimestampNTZ on) would infer TIMESTAMP_NTZ, which
+      watermarks reject.
+    - No per-trigger file cap, so availableNow replays the table in
+      ONE data micro-batch: with a 0-second watermark, a multi-batch
+      replay would drop any event that sorts behind an earlier
+      batch's maximum as late data — single-batch replay is what
+      makes the finite-input result equal the batch twin (the
+      production posture for live data is a real watermark delay,
+      not 0 seconds).
+    - ``scoped_shuffle_partitions(16)``: a stateful stream
       materializes one state-store partition per shuffle partition
       PER micro-batch; under a default-conf session (200) that is
       400 store commits for this replay — measured 6x slower than
       the data warrants. The conf is read at query start, so it is
       scoped to the stream and restored after.
     """
-    import shutil
-
-    from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch
-
-    scratch = mkscratch(prefix)
-    read_table(spark, sf_dir, "events").select(*select_cols).coalesce(
-        1
-    ).write.mode("overwrite").parquet(scratch)
-    stream = spark.readStream.schema(schema).parquet(scratch)
-    out = transform(stream)
-    try:
-        with scoped_shuffle_partitions(spark, 16):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # The memory sink holds the result rows; the events copy is
-        # dead the moment the stream terminates.
-        shutil.rmtree(scratch, ignore_errors=True)
+    stream = read_event_stream(
+        spark, os.path.join(sf_dir, "events.parquet"), schema=schema
+    )
+    with scoped_shuffle_partitions(spark, 16):
+        run_to_memory(transform(stream), query_name, output_mode="append")
     return spark.table(query_name)
 
 
@@ -224,18 +205,17 @@ def run_sessionize_over_events(
     This is real Structured Streaming execution — state store,
     watermark, micro-batches — driven to completion over fixed input,
     which is what makes the operator oracle-checkable. The replay
-    mechanics (scratch rewrite, explicit schema, single-batch
-    coalesce, scoped shuffle partitions) and their rationale live in
+    mechanics (in-place stream, declared schema, single micro-batch,
+    scoped shuffle partitions) and their rationale live in
     ``_replay_events_stream``, shared with the KMV and CMS runners.
     """
     if query_name is None:
         query_name = f"sessionize_stateful_sink_{next(_SINK_SEQ)}"
     return _replay_events_stream(
         spark, sf_dir,
-        ["user_id", F.col("ts").cast("timestamp").alias("ts")],
-        "user_id long, ts timestamp",
+        "user_id bigint, ts timestamp",
         lambda stream: sessionize_stateful(stream, gap_s=gap_s),
-        "sessionize_stream_", query_name,
+        query_name,
     )
 
 
@@ -335,7 +315,7 @@ def run_kmv_over_events(
     query_name: str | None = None,
 ) -> DataFrame:
     """Replay the finite events table through the streaming KMV sketch
-    (same scratch-copy + availableNow + memory-sink mechanics as
+    (same in-place stream + availableNow + memory-sink mechanics as
     ``run_sessionize_over_events``) and return the final per-key
     estimates, rounded like the batch query so the BATCH oracle
     applies verbatim."""
@@ -343,10 +323,9 @@ def run_kmv_over_events(
         query_name = f"kmv_stateful_sink_{next(_SINK_SEQ)}"
     result = _replay_events_stream(
         spark, sf_dir,
-        ["event_type", F.col("ts").cast("timestamp").alias("ts"), "user_id"],
-        "event_type string, ts timestamp, user_id long",
+        "event_type string, ts timestamp, user_id bigint",
         lambda stream: kmv_stateful(stream, k=k),
-        "kmv_stream_", query_name,
+        query_name,
     )
     return result.select(
         "event_type",
@@ -449,17 +428,16 @@ def run_cms_over_events(
     query_name: str | None = None,
 ) -> DataFrame:
     """Replay the finite events table through the streaming CMS
-    (scratch-copy + availableNow + memory-sink mechanics shared with
-    the KMV runner) and return each event type's final non-zero grid
-    cells."""
+    (in-place stream + availableNow + memory-sink mechanics shared
+    with the KMV runner) and return each event type's final non-zero
+    grid cells."""
     if query_name is None:
         query_name = f"cms_stateful_sink_{next(_SINK_SEQ)}"
     return _replay_events_stream(
         spark, sf_dir,
-        ["event_type", F.col("ts").cast("timestamp").alias("ts"), "user_id"],
-        "event_type string, ts timestamp, user_id long",
+        "event_type string, ts timestamp, user_id bigint",
         lambda stream: cms_stateful(stream, depth=depth, width=width),
-        "cms_stream_", query_name,
+        query_name,
     )
 
 
@@ -494,7 +472,6 @@ def run_kmv_multibatch_over_events(
     aggregate) sizes the ranges.
     """
     import glob
-    import os
     import shutil
 
     from ..sources.readers import read_table

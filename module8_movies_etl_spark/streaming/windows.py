@@ -55,15 +55,26 @@ def read_event_stream(
     schema=None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a parquet directory (the standard
-    bronze-layer pattern: writers append files, the stream discovers
-    them). Streaming sources require an explicit schema — pass one or
-    it is inferred from a one-off batch read of the same path."""
+    """File-source stream over parquet (the standard bronze-layer
+    pattern: writers append files, the stream discovers them).
+
+    A file source watches a directory, so a single-file ``path`` (the
+    benchmark's ``<sf_dir>/events.parquet``) streams its parent
+    directory filtered to that file name — the table is read where it
+    lives, no copy. Streaming sources require an explicit schema —
+    pass one or it is inferred from a one-off batch read of the same
+    path. A declared ``ts timestamp`` reads the events table's NTZ
+    footer as TIMESTAMP under any session; inference under a vanilla
+    session (inferTimestampNTZ on) gives TIMESTAMP_NTZ, which
+    watermarks reject."""
     if schema is None:
         schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if os.path.isfile(path):
+        path, name = os.path.split(path)
+        reader = reader.option("pathGlobFilter", name)
     return reader.parquet(path)
 
 
@@ -254,18 +265,11 @@ def run_hopping_over_events(
     Production callers use a short watermark and accept late-data
     drops past it.
     """
-    from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
-
-    scratch = mkscratch("stream_hopping_")
-    register(scratch)
-    batch = read_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("value").cast("decimal(28,6)").alias("value"),
-    )
-    batch.coalesce(1).write.mode("overwrite").parquet(scratch)
-    stream = read_event_stream(spark, scratch, schema=batch.schema)
+    stream = read_event_stream(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        schema="event_type string, ts timestamp, value double",
+    ).withColumn("value", F.col("value").cast("decimal(28,6)"))
     agg = (
         stream.withWatermark("ts", "240 hours")
         .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
@@ -302,16 +306,11 @@ def run_session_windows_over_events(
     ``[ts, ts+gap)``), which the oracle mirrors with ``>=`` on
     microsecond arithmetic.
     """
-    from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
-
-    scratch = mkscratch("stream_sessions_")
-    register(scratch)
-    batch = read_table(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts")
+    stream = read_event_stream(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        schema="user_id bigint, ts timestamp",
     )
-    batch.coalesce(1).write.mode("overwrite").parquet(scratch)
-    stream = read_event_stream(spark, scratch, schema=batch.schema)
     agg = (
         stream.withWatermark("ts", "240 hours")
         .groupBy(

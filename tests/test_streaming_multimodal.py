@@ -11,26 +11,17 @@ from module8_movies_etl_spark.sources import read_table
 from module8_movies_etl_spark.streaming.windows import run_to_memory
 
 SF = "/root/testdata/sf0.001"
+EVENTS = SF + "/events.parquet"
 
 
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    """Stream-friendly copy of events: the raw file has TIMESTAMP(NANOS)
-    which the batch reader shims (sources/readers.py); rewrite once so
-    the streaming source reads a plain µs timestamp."""
-    d = str(tmp_path_factory.mktemp("events_stream"))
-    read_table(spark, SF, "events").write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_tumbling_stream_matches_batch(spark, events_dir):
-    batch = spark.read.parquet(events_dir)
+def test_tumbling_stream_matches_batch(spark):
+    batch = read_table(spark, SF, "events")
     expected = {
         (r.window_start, r.event_type): (r.n_events, r.total_value)
         for r in streaming.tumbling_event_counts(batch).collect()
     }
 
-    stream = streaming.read_event_stream(spark, events_dir)
+    stream = streaming.read_event_stream(spark, EVENTS)
     assert stream.isStreaming
     run_to_memory(
         streaming.tumbling_event_counts(stream), "tumbling_test", "complete"
@@ -42,8 +33,8 @@ def test_tumbling_stream_matches_batch(spark, events_dir):
     assert got == expected and len(got) > 0
 
 
-def test_session_window_stream_runs(spark, events_dir):
-    stream = streaming.read_event_stream(spark, events_dir)
+def test_session_window_stream_runs(spark):
+    stream = streaming.read_event_stream(spark, EVENTS)
     run_to_memory(
         streaming.session_window_counts(stream, gap="30 minutes"),
         "sessions_test",
@@ -55,11 +46,11 @@ def test_session_window_stream_runs(spark, events_dir):
     assert rows.filter(F.col("n_events") <= 0).count() == 0
 
 
-def test_stream_stream_interval_join_matches_batch(spark, events_dir):
+def test_stream_stream_interval_join_matches_batch(spark):
     """Watermarked stream-stream interval join (clicks within 10 min
     before each error) equals the batch non-equi join over the same
     finite input."""
-    batch = spark.read.parquet(events_dir)
+    batch = read_table(spark, SF, "events")
     be = batch.filter(F.col("event_type") == "error").alias("l")
     bc = batch.filter(F.col("event_type") == "click").alias("r")
     expected = {
@@ -74,10 +65,10 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
         .collect()
     }
 
-    se = streaming.read_event_stream(spark, events_dir).filter(
+    se = streaming.read_event_stream(spark, EVENTS).filter(
         F.col("event_type") == "error"
     )
-    sc = streaming.read_event_stream(spark, events_dir).filter(
+    sc = streaming.read_event_stream(spark, EVENTS).filter(
         F.col("event_type") == "click"
     )
     joined = streaming.windows.interval_join_streams(
@@ -148,6 +139,18 @@ def test_sessionize_stateful_matches_batch_contract(spark):
         .collect()
     }
     assert got == expected and len(got) > 0
+
+
+def test_event_replays_write_no_scratch(spark, tmp_path, monkeypatch):
+    """The events replays stream the table where it lives: no scratch
+    copy is written, so nothing waits on the exit reaper."""
+    from module8_movies_etl_spark.streaming.dedup import run_dedup_over_events
+    from module8_movies_etl_spark.streaming.stateful import run_sessionize_over_events
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    assert run_dedup_over_events(spark, SF).count() > 0
+    assert run_sessionize_over_events(spark, SF).count() > 0
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_multimodal_feature_extraction(spark):

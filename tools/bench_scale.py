@@ -338,8 +338,7 @@ def main() -> None:
         if only is not None and "queries" in prior:
             # keep only prior rows still in HEADLINE: rows for renamed
             # or removed queries must not be carried forward as
-            # current measurements (the stale-row problem
-            # bench_scale3.py filters the same way)
+            # current measurements
             merged = {
                 k: v for k, v in prior["queries"].items() if k in HEADLINE
             }
