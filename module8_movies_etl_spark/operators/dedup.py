@@ -913,6 +913,7 @@ def connected_components(
     node set is itself an expensive pipeline should ``snapshot()`` it
     first.
     """
+    from ..sources.readers import _footer_schema
     from ..sources.scratch import mkscratch, register
 
     spark = pairs.sparkSession
@@ -952,14 +953,19 @@ def connected_components(
         .write.mode("overwrite")
         .parquet(f"{scratch}/edges")
     )
-    edges = spark.read.parquet(f"{scratch}/edges")
+    # Every re-read below pins its schema from the written footer, so
+    # it starts no schema-inference job.
+    def reread(p: str) -> DataFrame:
+        return spark.read.schema(_footer_schema(spark, p)).parquet(p)
+
+    edges = reread(f"{scratch}/edges")
     # Per-round label writes get NO explicit REBALANCE (unlike the
     # edges write above): every round's output is the tail of a
     # groupBy/join shuffle that AQE has already coalesced to
     # right-sized partitions, so the extra rebalance exchange per
     # round was pure overhead — 2 exchanges → 1 per round, and with
-    # the schema-pinned re-read (skips one footer-read job per round)
-    # the CC stage measured 3.34 → 2.73 s median (5-rep alternating
+    # the schema-pinned re-reads (no inference job per round) the
+    # CC stage measured 3.34 → 2.73 s median (5-rep alternating
     # A/B, sf0.1 ER graph, r11). The same holds at 100 TB: the write
     # inherits AQE's size-targeted partitions either way.
     import shutil
@@ -997,8 +1003,7 @@ def connected_components(
         ).drop("_changed").write.mode("overwrite").parquet(
             f"{scratch}/iter1"
         )
-        labels = spark.read.parquet(f"{scratch}/iter1")
-        label_schema = labels.schema
+        labels = reread(f"{scratch}/iter1")
         if (obs1.get["n_changed"] or 0) == 0:
             converged_at = 1
         later_rounds = range(2, max_iters + 1) if converged_at is None else ()
@@ -1055,9 +1060,7 @@ def connected_components(
                 f"{scratch}/iter{i}"
             )
             n_changed = obs.get["n_changed"] or 0
-            labels = spark.read.schema(label_schema).parquet(
-                f"{scratch}/iter{i}"
-            )
+            labels = reread(f"{scratch}/iter{i}")
             if n_changed == 0:
                 converged_at = i
                 break

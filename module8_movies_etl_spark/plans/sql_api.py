@@ -24,14 +24,17 @@ def register_tables(
 ) -> list[str]:
     """Register each parquet table as a temp view named after the
     table. Returns the registered names. Re-registering replaces the
-    prior view (idempotent across sf_dirs)."""
+    prior view (idempotent across sf_dirs). A missing table (e.g. no
+    embeddings at some SFs) is skipped; one that is present but cannot
+    be read raises."""
     out = []
     for t in tables:
         try:
-            read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-            out.append(t)
-        except Exception:  # noqa: BLE001 - missing optional table (e.g. no
-            continue  # embeddings at some SFs) just isn't registered
+            df = read_table(spark, sf_dir, t)
+        except FileNotFoundError:
+            continue
+        df.createOrReplaceTempView(t)
+        out.append(t)
     return out
 
 

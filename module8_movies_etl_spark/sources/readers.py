@@ -19,10 +19,13 @@ and parquet is the only format here that prunes it.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TPCH_TABLES = (
     "region",
@@ -53,9 +56,46 @@ def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    parquet footer on the driver instead of by an inference job.
+
+    Like Spark's inference, it reads ONE data file: ``path`` itself, or
+    the first part file (by name) of a flat directory, skipping names
+    that start with ``_`` or ``.`` (markers, summaries, checksums). A
+    footer written by Spark carries Spark's own schema as JSON, which
+    inference prefers; any other footer maps from its Arrow schema,
+    with an unzoned timestamp read as TIMESTAMP_NTZ exactly when the
+    session's ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on.
+    (Two footer types no table here holds map differently: unsigned
+    integers raise, and INT96 from other writers maps like any unzoned
+    timestamp where Spark always says TIMESTAMP.) A missing path, or a
+    directory with no data file, raises ``FileNotFoundError``."""
+    f = path
+    if os.path.isdir(path):
+        parts = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+        if not parts:
+            raise FileNotFoundError(f"no parquet data file in {path}")
+        f = os.path.join(path, parts[0])
+    schema = pq.read_schema(f)
+    meta = schema.metadata or {}
+    spark_json = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_json is not None:
+        return T.StructType.fromJson(json.loads(spark_json))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    return from_arrow_schema(schema, prefer_timestamp_ntz=ntz.lower() == "true")
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic benchmark table from a scale-factor dir."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Read one synthetic benchmark table from a scale-factor dir.
+
+    The schema comes from the table's parquet footer (``_footer_schema``)
+    and is pinned on the read, so building the DataFrame starts no Spark
+    job — at these table sizes the inference job cost more than most
+    scans. It reads the session's conf and writes none. A missing table
+    raises ``FileNotFoundError``."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
 
 
 def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

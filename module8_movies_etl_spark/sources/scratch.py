@@ -9,16 +9,18 @@ boundaries; this module is the ONE implementation of that idiom
 (connected components, the shingle-postings index, and the curation
 capstone all route through it).
 
-Lifecycle: the returned DataFrame lazily reads the written files, so
-a snapshot cannot be deleted at call time. Every snapshot dir is
-registered and reaped at interpreter exit (atexit), bounding
+Lifecycle: the returned DataFrame reads the written files lazily,
+with its schema pinned from their footer (the re-read starts no Spark
+job), so a snapshot cannot be deleted at call time. Every snapshot
+dir is registered and reaped at interpreter exit (atexit), bounding
 accumulation to one process's working set. Callers that finish with a
 snapshot early can ``release()`` it explicitly.
 
 Deployment note: ``tempfile.mkdtemp`` is DRIVER-local, which is
 correct for this engine's local-mode target; a multi-node deployment
-must point ``scratch_root`` at a shared filesystem/object-store URI
-(executors write and read the snapshot, not the driver).
+must point ``scratch_root`` at a shared filesystem mounted on every
+node (executors write and read the snapshot; the driver reads only
+its footer, through a local path, to pin the re-read's schema).
 """
 
 from __future__ import annotations
@@ -29,6 +31,8 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame
+
+from .readers import _footer_schema
 
 _LIVE: set[str] = set()
 
@@ -65,7 +69,8 @@ def snapshot(
 
     NOTE: this executes ``df`` EAGERLY — builders that call it run
     their upstream stages at construction time, trading laziness for
-    single execution of a multiply-consumed stage.
+    single execution of a multiply-consumed stage. The write is the
+    only job: the re-read takes its schema from the written footer.
 
     ``rebalance`` (default) routes the write through AQE's REBALANCE
     exchange: small outputs coalesce to a few right-sized files
@@ -80,7 +85,8 @@ def snapshot(
     out = df.hint("rebalance") if rebalance else df
     out.write.mode("overwrite").parquet(path)
     _LIVE.add(path)
-    return df.sparkSession.read.parquet(path)
+    spark = df.sparkSession
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
 
 
 def local_snapshot(df: DataFrame) -> DataFrame:

@@ -18,6 +18,8 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import _footer_schema
+
 
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int = 16):
@@ -62,13 +64,13 @@ def read_event_stream(
     benchmark's ``<sf_dir>/events.parquet``) streams its parent
     directory filtered to that file name — the table is read where it
     lives, no copy. Streaming sources require an explicit schema —
-    pass one or it is inferred from a one-off batch read of the same
-    path. A declared ``ts timestamp`` reads the events table's NTZ
-    footer as TIMESTAMP under any session; inference under a vanilla
-    session (inferTimestampNTZ on) gives TIMESTAMP_NTZ, which
-    watermarks reject."""
+    pass one or it is taken from the path's parquet footer, the schema
+    a batch read would infer, without a Spark job. A declared ``ts
+    timestamp`` reads the events table's NTZ footer as TIMESTAMP under
+    any session; inference under a vanilla session (inferTimestampNTZ
+    on) gives TIMESTAMP_NTZ, which watermarks reject."""
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = _footer_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

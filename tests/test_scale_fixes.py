@@ -1,13 +1,16 @@
 """Regression tests for the round-2 scale fixes: persist-free dedup
 pipelines, deterministic dedup_by_key default, single-scan null_prune,
-and session-conf hygiene in read_table."""
+and session-conf hygiene in read_table — plus job-free table reads
+(footer-pinned schemas) and the SQL view registration built on them."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from module8_movies_etl_spark.operators import dedup, filters
 from module8_movies_etl_spark.sources import read_table
+from module8_movies_etl_spark.sources.readers import TPCH_TABLES
 
 SF = "/root/testdata/sf0.001"
 
@@ -62,6 +65,88 @@ def test_null_prune_is_single_job(spark):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert kept == ["id", "half_null"]
     assert len(after - before) == 1
+
+
+def test_read_table_starts_no_job(spark):
+    """The schema comes from the parquet footer on the driver, so
+    building a table's DataFrame launches no inference job. The
+    listener bus is drained so no job start is missed."""
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    for name in TPCH_TABLES:
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup(None))
+        read_table(spark, SF, name)
+        bus.waitUntilEmpty()
+        assert set(tracker.getJobIdsForGroup(None)) == before, name
+
+
+# Spark-written, so its footer carries Spark's own schema JSON.
+_TYPED_SQL = """
+SELECT cast(id AS tinyint) AS c_tinyint, cast(id AS smallint) AS c_smallint,
+       cast(id AS int) AS c_int, id AS c_bigint, cast(id AS float) AS c_float,
+       cast(id AS double) AS c_double, cast(id AS decimal(12, 3)) AS c_decimal,
+       cast(id AS string) AS c_string, id % 2 = 0 AS c_boolean,
+       cast(cast(id AS string) AS binary) AS c_binary,
+       date_add(DATE'2020-01-01', cast(id AS int)) AS c_date,
+       timestamp_seconds(id) AS c_timestamp,
+       cast(timestamp_seconds(id) AS timestamp_ntz) AS c_timestamp_ntz,
+       array(id, id + 1) AS c_array, map(cast(id AS string), id) AS c_map,
+       named_struct('a', id, 'b', cast(id AS string)) AS c_struct
+FROM range(5)
+"""
+
+
+def test_read_table_schema_matches_inference(spark, tmp_path):
+    """``read_table``'s footer schema equals what ``spark.read.parquet``
+    infers, for the pyarrow-written test tables and for a Spark-written
+    table with every column family, under both timestamp-inference
+    settings."""
+    spark.sql(_TYPED_SQL).write.parquet(str(tmp_path / "t.parquet"))
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for ntz in ("false", "true"):
+            spark.conf.set(key, ntz)
+            for sf_dir, name in [(SF, n) for n in TPCH_TABLES] + [(str(tmp_path), "t")]:
+                path = f"{sf_dir}/{name}.parquet"
+                got = read_table(spark, sf_dir, name)
+                assert got.schema == spark.read.parquet(path).schema, (ntz, name)
+            typed = read_table(spark, str(tmp_path), "t")
+            assert sorted(typed.collect()) == sorted(
+                spark.read.parquet(str(tmp_path / "t.parquet")).collect()
+            )
+    finally:
+        spark.conf.set(key, prev)
+    assert dict(typed.dtypes)["c_timestamp_ntz"] == "timestamp_ntz"
+
+
+def test_snapshot_of_empty_frame_keeps_schema(spark, tmp_path):
+    """An empty snapshot still writes a footer, and the re-read takes
+    its column names and types from it."""
+    from module8_movies_etl_spark.sources.scratch import snapshot
+
+    df = spark.sql(_TYPED_SQL).limit(0)
+    out = snapshot(df, root=str(tmp_path))
+    assert out.dtypes == df.dtypes
+    assert out.count() == 0
+
+
+def test_register_tables_skips_missing_but_raises_on_corrupt(spark, tmp_path):
+    """A missing table stays unregistered; a present but unreadable
+    one is an error, not a silently missing view."""
+    import shutil
+
+    from module8_movies_etl_spark.plans.sql_api import register_tables
+
+    for name in TPCH_TABLES:
+        if name != "embeddings":
+            shutil.copy(f"{SF}/{name}.parquet", tmp_path / f"{name}.parquet")
+    got = register_tables(spark, str(tmp_path))
+    assert got == [n for n in TPCH_TABLES if n != "embeddings"]
+    (tmp_path / "region.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(ValueError, match="parquet"):
+        register_tables(spark, str(tmp_path))
 
 
 def test_embedding_near_dups_join_is_salted(spark):
