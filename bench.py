@@ -64,7 +64,7 @@ HEADLINE = [
     "cosine_topk_lsh",
     "cosine_topk_ivf",
     "tokenize_documents",
-    "multimodal_features",
+    "bmp_decode_features",
     "tumbling_window_counts",
     "training_data_pipeline",
     "curation_pipeline_v2",

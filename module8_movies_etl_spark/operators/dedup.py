@@ -582,25 +582,6 @@ def _dedup_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.repartition(*keys).distinct()
 
 
-def minhash_signature(text_col: str, n_hashes: int = 8) -> list[F.Column]:
-    """Deterministic MinHash: hash_i(doc) = min over distinct words of
-    md5(word ⊕ ':i'). md5 is uniform enough for Jaccard estimation and
-    identical across engines/runs (no seed state).
-    """
-    words = _distinct_words(text_col)
-
-    def _mh(i: int) -> F.Column:
-        # NB: the lambda must take exactly ONE parameter — a two-param
-        # lambda (e.g. `lambda w, i=i`) makes pyspark pass the array
-        # index as the second argument, silently clobbering the closure.
-        suffix = F.lit(f":{i}")
-        return F.array_min(
-            F.transform(words, lambda w: F.md5(F.concat(w, suffix)))
-        ).alias(f"mh{i}")
-
-    return [_mh(i) for i in range(n_hashes)]
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

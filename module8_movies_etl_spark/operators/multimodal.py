@@ -3,10 +3,15 @@
 Image/audio/video payloads are opaque ``binary`` columns traveling
 with typed metadata — the engine treats decode as a pluggable
 Arrow-batched stage (``mapInPandas``): the Spark-side contract
-(schema, batching, partition flow) is real and tested; the actual
-codec is injected, because media libraries are environment-specific.
-``fake_image_decoder`` is the deterministic stand-in used by tests;
-``decode_stub`` marks where a real libjpeg/ffmpeg call plugs in.
+(schema, batching, partition flow) is real and tested; the codec is
+the caller's per-row ``decoder`` (``extract_media_features``) or
+``sampler`` (``sample_frames``). This module's codecs are real and
+pure Python, one per compression family: ``decode_bmp`` /
+``decode_wav`` (header-parsed), ``decode_gif`` (LZW), ``decode_png``
+(DEFLATE), ``decode_jpeg`` (baseline DCT/Huffman) and
+``decode_avi_video`` (motion-JPEG AVI). Inter-frame video codecs
+(H.264/VP9/AV1) need a library such as ffmpeg, bound through the
+same slot.
 
 Scale notes: binary payloads make wide rows — keep them OUT of
 shuffles (attach features first, shuffle features only), size
@@ -22,14 +27,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("content_sha", T.StringType()),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -55,33 +52,6 @@ def attach_payload_meta(
             F.octet_length(p).cast("long").alias("n_bytes"),
             F.sha2(p, 256).alias("content_sha"),
         ),
-    )
-
-
-def decode_stub(payload: bytes) -> dict[str, Any]:
-    """Real-decoder slot for the one codec family that still needs a
-    NON-STDLIB library: INTER-FRAME video codecs (H.264/VP9/AV1 —
-    motion compensation + reference-frame state via ffmpeg). A
-    production build binds ffmpeg here; this container has none, so
-    the stub is explicit instead of silently wrong. Every OTHER rung
-    of the codec ladder IS implemented for real — one codec per
-    compression family: ``decode_bmp`` / ``decode_wav``
-    (header-parsed), ``decode_gif`` (DICTIONARY-coded — real
-    variable-width LZW), ``decode_png`` (DEFLATE — stdlib zlib
-    inflate + all five scanline unfilters + per-chunk CRC),
-    ``decode_jpeg`` (DCT/ENTROPY-coded — canonical Huffman decode,
-    DC DPCM + AC run-length, dequantization, 8×8 IDCT, YCbCr→RGB),
-    ``spectral_wav_features`` (FFT DSP stage), and — since round
-    10 — ``decode_avi_video`` (REAL video: RIFF/AVI demux +
-    per-frame baseline-JPEG decode for motion-JPEG streams), each
-    exercised on real bytes by the catalog
-    (bmp/wav/png/jpeg/gif_decode_features, wav_spectral_features,
-    video_frames_features)."""
-    raise NotImplementedError(
-        "inter-frame video codecs (H.264/VP9/AV1) require ffmpeg, not "
-        "present in this environment; motion-JPEG AVI decodes for real "
-        "via decode_avi_video — inject other decoders via "
-        "extract_media_features(decoder=...)"
     )
 
 
@@ -126,8 +96,9 @@ def decode_bmp(payload: bytes) -> dict[str, Any]:
     tool exports — anything else raises rather than guessing.
 
     ``mean_luma`` is the raw IEEE division of the exact byte sum —
-    bit-identical to an oracle's closed form (see
-    ``fake_image_decoder`` for why it is not rounded here)."""
+    bit-identical to an oracle's closed form. It is not rounded: a
+    Python ``round`` (half-even) and SQL ``round`` (half-away) would
+    diverge on ties."""
     import struct
 
     if payload[:2] != b"BM":
@@ -1105,6 +1076,9 @@ GIF_FEATURE_SCHEMA = T.StructType(
 )
 
 
+_SAMPLE_RATES = (8000, 16000, 22050, 44100)
+
+
 def make_wav(doc_id: int) -> bytes:
     """Deterministic REAL RIFF/WAVE file: canonical 44-byte header
     (PCM fmt chunk + data chunk) followed by mono 16-bit
@@ -1135,7 +1109,8 @@ def decode_wav(payload: bytes) -> dict[str, Any]:
     byte) to find ``fmt `` and ``data``, reads (format, channels,
     rate, bits) from the fmt chunk, and computes frame count,
     duration, and RMS from the actual int16 sample bytes. PCM-16 only
-    — compressed codecs raise into the ``decode_stub`` slot.
+    — a compressed codec raises ``ValueError``; it needs its own
+    decoder.
 
     ``duration_s``/``rms`` are raw IEEE divisions over exact integer
     sums, bit-identical to an oracle's closed form."""
@@ -1274,7 +1249,7 @@ def downsample_wav_half(payload: bytes) -> dict[str, Any]:
     This is the transform slot of the decode → RESAMPLE → feature
     pipeline a production build binds scipy/librosa into; here the
     sample arithmetic itself is real and oracle-checkable. PCM-16
-    MONO only — anything else raises into the ``decode_stub`` slot.
+    MONO only — anything else raises ``ValueError``.
     """
     import math
     import struct
@@ -1554,9 +1529,9 @@ def demux_avi_mjpeg(payload: bytes) -> dict[str, Any]:
 
 
 def avi_frame_sampler(payload: bytes) -> "list[bytes]":
-    """REAL frame sampler for MJPEG-in-AVI payloads — the injectable
-    ``sample_frames(sampler=...)`` slot, no longer a stub for this
-    container: each returned element is a complete baseline JPEG."""
+    """REAL frame sampler for MJPEG-in-AVI payloads, for the
+    ``sample_frames(sampler=...)`` slot: each returned element is a
+    complete baseline JPEG."""
     return demux_avi_mjpeg(payload)["frames"]
 
 
@@ -1642,52 +1617,6 @@ def synthesize_media_payloads(
     return src.mapInPandas(process, schema="doc_id long, payload binary")
 
 
-def fake_image_decoder(payload: bytes) -> dict[str, Any]:
-    """Deterministic stand-in decoder: derives pseudo image properties
-    from the payload bytes (stable across runs/engines). Exercises the
-    FULL Spark path — Arrow batching, schema enforcement, partition
-    parallelism — with only the codec faked.
-
-    ``mean_luma`` is deliberately NOT rounded: the raw IEEE division
-    is bit-identical to the DuckDB oracle's, while a Python ``round``
-    (half-even) vs SQL ``round`` (half-away) would diverge on ties.
-    """
-    import hashlib
-
-    h = hashlib.sha256(payload).digest()
-    return {
-        "width": 64 + h[0],
-        "height": 64 + h[1],
-        "n_channels": 1 + (h[2] % 4),
-        "mean_luma": sum(h[3:11]) / (8 * 255.0),
-    }
-
-
-def fake_image_decoder_batch(payloads: "pd.Series") -> "pd.DataFrame":
-    """Vectorized form of ``fake_image_decoder`` for a whole Arrow
-    batch: per-row work is ONLY the sha256 call (not vectorizable);
-    feature assembly is numpy over the stacked digests. Identical
-    output to mapping the row decoder (pinned by test)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    digests = np.frombuffer(
-        b"".join(hashlib.sha256(bytes(p)).digest() for p in payloads),
-        dtype=np.uint8,
-    ).reshape(-1, 32)
-    return pd.DataFrame(
-        {
-            "width": (64 + digests[:, 0].astype(np.int32)),
-            "height": (64 + digests[:, 1].astype(np.int32)),
-            "n_channels": (1 + (digests[:, 2] % 4).astype(np.int32)),
-            "mean_luma": digests[:, 3:11].sum(axis=1, dtype=np.int64)
-            / (8 * 255.0),
-        }
-    )
-
-
 RESIZE_FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -1718,38 +1647,6 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-_SAMPLE_RATES = (8000, 16000, 22050, 44100)
-
-
-def fake_audio_decoder_batch(payloads: "pd.Series") -> "pd.DataFrame":
-    """Deterministic audio-codec stand-in (a real build binds
-    soundfile/ffmpeg): pseudo waveform properties from the payload's
-    sha256, vectorized over the Arrow batch like the image twin.
-    ``duration_s``/``rms`` are raw IEEE divisions — bit-identical to
-    the DuckDB oracle's, see ``fake_image_decoder``."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    digests = np.frombuffer(
-        b"".join(hashlib.sha256(bytes(p)).digest() for p in payloads),
-        dtype=np.uint8,
-    ).reshape(-1, 32)
-    rates = np.asarray(_SAMPLE_RATES, dtype=np.int64)[digests[:, 0] % 4]
-    n_samples = (
-        digests[:, 1].astype(np.int64) * 256 + digests[:, 2].astype(np.int64)
-    ) * 16 + 1
-    return pd.DataFrame(
-        {
-            "sample_rate": rates.astype(np.int32),
-            "n_samples": n_samples,
-            "duration_s": n_samples / rates.astype(np.float64),
-            "rms": digests[:, 11:19].sum(axis=1, dtype=np.int64) / (8 * 255.0),
-        }
-    )
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -1757,30 +1654,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_sha", T.StringType()),
     ]
 )
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def frame_sample_stub(payload: bytes) -> "list[bytes]":
-    """Real frame-sampler slot for INTER-FRAME codecs (ffmpeg
-    keyframe extraction in a production build). Motion-JPEG AVI
-    payloads sample for REAL via ``avi_frame_sampler`` (a pure-stdlib
-    RIFF demux — every '00dc' chunk is a standalone baseline JPEG);
-    only codecs whose frames depend on reference-frame state need
-    the library."""
-    raise NotImplementedError(
-        "frame sampling for inter-frame codecs requires a video "
-        "library not present in this environment; MJPEG-AVI samples "
-        "for real via avi_frame_sampler — inject via "
-        "sample_frames(sampler=...)"
-    )
 
 
 def fake_frame_sampler(payload: bytes) -> "list[bytes]":
@@ -1800,13 +1673,13 @@ def fake_frame_sampler(payload: bytes) -> "list[bytes]":
 
 def sample_frames(
     df: DataFrame,
+    sampler: Callable[[bytes], "list[bytes]"],
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    sampler: Callable[[bytes], "list[bytes]"] = frame_sample_stub,
 ) -> DataFrame:
     """Frame-sampling stage: one row in, N rows out (doc_id,
     frame_idx, frame_sha) — the one-to-many ``mapInPandas`` shape for
-    video → frames. Emitting the frame HASH (not the frame bytes)
+    video → frames; ``sampler`` maps one payload to its frames. Emitting the frame HASH (not the frame bytes)
     keeps the wide binary out of every downstream shuffle; a pipeline
     that needs pixels joins the frames back by (doc_id, frame_idx) at
     the last narrow stage. A NULL payload yields zero frames (nothing
@@ -1835,62 +1708,11 @@ def sample_frames(
     return src.mapInPandas(process, schema=FRAME_SCHEMA)
 
 
-def fake_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in resize: a sha256-keyed byte stream of
-    exactly width*height bytes (a real build calls PIL/libvips here)."""
-    import hashlib
-
-    out = bytearray()
-    counter = 0
-    while len(out) < width * height:
-        out += hashlib.sha256(payload + counter.to_bytes(4, "big")).digest()
-        counter += 1
-    return bytes(out[: width * height])
-
-
-def resize_payloads(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    resizer: "Callable[[bytes, int, int], bytes]" = fake_resizer,
-) -> DataFrame:
-    """Resize stage: binary in, binary out with recorded target dims —
-    the payload-transforming ``mapInPandas`` shape (decode and
-    frame-sample REDUCE the payload; this one rewrites it, so the
-    output row stays wide and the same keep-out-of-shuffles rule
-    applies). A NULL payload passes through as a NULL payload row
-    (nothing to resize), not a task-killing ``bytes(None)``
-    TypeError."""
-    import pandas as pd
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("_p"))
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        None if p is None else resizer(bytes(p), width, height)
-                        for p in pdf["_p"]
-                    ],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return src.mapInPandas(process, schema=RESIZED_SCHEMA)
-
-
 def extract_media_features(
     df: DataFrame,
+    decoder: Callable[[bytes], dict[str, Any]],
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    decoder: Callable[[bytes], dict[str, Any]] = decode_stub,
-    batch_decoder: "Callable[[pd.Series], pd.DataFrame] | None" = None,
-    batch_size_hint: int = 256,
     feature_schema: T.StructType = FEATURE_SCHEMA,
 ) -> DataFrame:
     """Decode/feature-extract stage: Arrow-batched ``mapInPandas`` over
@@ -1898,9 +1720,7 @@ def extract_media_features(
     per-blob Python work at scale (no shuffle; the payload column is
     pruned immediately after this projection).
 
-    ``batch_decoder`` (Series of payloads → feature DataFrame) is the
-    fast path — one Python call per Arrow batch; ``decoder`` is the
-    per-row fallback for codecs without a batched API.
+    ``decoder`` maps one payload to a dict of its features.
     ``feature_schema`` selects the modality's typed output (image
     ``FEATURE_SCHEMA``, audio ``AUDIO_FEATURE_SCHEMA``, ...); the
     stage itself is modality-agnostic.
@@ -1921,10 +1741,7 @@ def extract_media_features(
             mask = pdf["_p"].notna()
             good = pdf[mask]
             if len(good):
-                if batch_decoder is not None:
-                    out = batch_decoder(good["_p"])
-                else:
-                    out = pd.DataFrame([decoder(bytes(b)) for b in good["_p"]])
+                out = pd.DataFrame([decoder(bytes(b)) for b in good["_p"]])
                 out.insert(0, "doc_id", good["doc_id"].values)
             else:
                 out = pd.DataFrame(columns=["doc_id", *feat_cols])

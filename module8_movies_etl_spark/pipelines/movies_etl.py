@@ -199,9 +199,11 @@ def kaggle_transform(kaggle: DataFrame) -> DataFrame:
 
 def rating_histogram(ratings: DataFrame) -> DataFrame:
     """Stage 4 (reference ``challenge.py:293-296``): per-movie rating
-    histogram. A1 + V1 fused into one pivot-count (single shuffle on
-    movieId); V2's float-derived names (``rating_0.5``…) pinned with an
-    explicit value domain so the output schema is plan-time stable."""
+    histogram. A1 + V1 fused into one pivot-count, which plans two
+    exchanges: a (movieId, rating) count aggregate, then the pivot's
+    regroup on movieId. V2's float-derived names (``rating_0.5``…) are
+    pinned with an explicit value domain so the output schema is
+    plan-time stable."""
     rating_values = [0.5, 1.0, 1.5, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5, 5.0]
     hist = pivot.pivot_count(
         ratings, "movieId", "rating", values=rating_values, prefix="rating_"

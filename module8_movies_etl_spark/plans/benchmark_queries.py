@@ -1830,37 +1830,6 @@ def null_prune_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filters.prune_mostly_null_columns(wide, threshold=0.9)
 
 
-def _mm_byte(i: int) -> str:
-    """Byte ``i`` of sha256(text) as an int, from the hex digest —
-    DuckDB-side mirror of ``hashlib.sha256(payload).digest()[i]``."""
-    return f"CAST(concat('0x', substr(sha256(text), {2 * i + 1}, 2)) AS INTEGER)"
-
-
-_MM_FEATURES_ORACLE = f"""
-SELECT doc_id,
-       64 + {_mm_byte(0)} AS width,
-       64 + {_mm_byte(1)} AS height,
-       1 + ({_mm_byte(2)} % 4) AS n_channels,
-       ({" + ".join(_mm_byte(i) for i in range(3, 11))}) / (8 * 255.0) AS mean_luma
-FROM documents
-"""
-
-
-@query("multimodal_features", _MM_FEATURES_ORACLE)
-def multimodal_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[multimodal] Arrow-batched mapInPandas feature extraction over
-    binary payloads — schema/batching/partition plumbing real, codec
-    faked deterministically (operators.multimodal; the production slot
-    is decode_stub). The fake decoder is pure sha256 byte arithmetic,
-    so the DuckDB oracle reproduces it exactly (full rows+schema+hash
-    check); mean_luma is an unrounded IEEE division on both sides."""
-    d = read_table(spark, sf_dir, "documents")
-    payload = d.withColumn("payload", F.encode("text", "UTF-8"))
-    return multimodal.extract_media_features(
-        payload, batch_decoder=multimodal.fake_image_decoder_batch
-    )
-
-
 _TUMBLING_ORACLE = """
 SELECT CAST((epoch_us(ts) // 1000000) // 300 * 300 AS BIGINT) AS window_start_s,
        event_type,
@@ -2254,8 +2223,8 @@ FROM documents
 def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[multimodal] Opaque-binary column plumbing: payload byte length
     + content hash over an encoded binary column — the schema/scan
-    pattern for image/audio blobs (decode itself is the stubbed
-    Pandas-UDF stage in operators.multimodal).
+    pattern for image/audio blobs (decode itself is the Arrow-batched
+    stage in operators.multimodal).
     """
     d = read_table(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
@@ -3759,39 +3728,8 @@ def cohort_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Multimodal: audio modality (brief: image/audio/video columns).
+# Multimodal: real codecs on genuine container bytes.
 # --------------------------------------------------------------------------
-
-_MM_AUDIO_ORACLE = f"""
-SELECT doc_id,
-       CASE ({_mm_byte(0)} % 4) WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                                WHEN 2 THEN 22050 ELSE 44100 END AS sample_rate,
-       CAST(({_mm_byte(1)} * 256 + {_mm_byte(2)}) * 16 + 1 AS BIGINT) AS n_samples,
-       CAST(({_mm_byte(1)} * 256 + {_mm_byte(2)}) * 16 + 1 AS DOUBLE)
-         / (CASE ({_mm_byte(0)} % 4) WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                                     WHEN 2 THEN 22050 ELSE 44100 END)
-           AS duration_s,
-       ({" + ".join(_mm_byte(i) for i in range(11, 19))}) / (8 * 255.0) AS rms
-FROM documents
-"""
-
-
-@query("multimodal_audio_features", _MM_AUDIO_ORACLE)
-def multimodal_audio_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[multimodal] Audio-modality twin of ``multimodal_features``:
-    the SAME modality-agnostic Arrow decode stage with the audio
-    schema and a vectorized fake waveform codec (sample rate from a
-    digest byte, sample count from two, duration/rms as raw IEEE
-    divisions). The production slot binds soundfile/ffmpeg; the
-    oracle replays the sha256 arithmetic byte for byte."""
-    d = read_table(spark, sf_dir, "documents")
-    payload = d.withColumn("payload", F.encode("text", "UTF-8"))
-    return multimodal.extract_media_features(
-        payload,
-        batch_decoder=multimodal.fake_audio_decoder_batch,
-        feature_schema=multimodal.AUDIO_FEATURE_SCHEMA,
-    )
-
 
 _BMP_DECODE_ORACLE = """
 WITH p AS (

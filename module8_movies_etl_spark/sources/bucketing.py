@@ -30,7 +30,7 @@ keeps the data external so tests can target scratch dirs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -49,18 +49,3 @@ def write_bucketed(
         writer = writer.option("path", path)
     writer.saveAsTable(table)
 
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two bucketed catalog tables on their bucket key.
-
-    With compatible bucketing this plans as a zero-exchange
-    SortMergeJoin — the physical proof is pinned by
-    ``test_bucketed_join_has_no_exchange``.
-    """
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)

@@ -21,7 +21,9 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterator
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -67,23 +69,55 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
     inference prefers; any other footer maps from its Arrow schema,
     with an unzoned timestamp read as TIMESTAMP_NTZ exactly when the
     session's ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on.
-    (Two footer types no table here holds map differently: unsigned
-    integers raise, and INT96 from other writers maps like any unzoned
-    timestamp where Spark always says TIMESTAMP.) A missing path, or a
-    directory with no data file, raises ``FileNotFoundError``."""
+    Two physical types map as Spark maps them, not as Arrow does: an
+    unsigned integer widens to the next signed type (UINT64 to
+    DECIMAL(20,0)), and an INT96 timestamp is always TIMESTAMP. A
+    missing path, or a directory with no data file, raises
+    ``FileNotFoundError``."""
     f = path
     if os.path.isdir(path):
         parts = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
         if not parts:
             raise FileNotFoundError(f"no parquet data file in {path}")
         f = os.path.join(path, parts[0])
-    schema = pq.read_schema(f)
+    footer = pq.ParquetFile(f)
+    schema = footer.schema_arrow
     meta = schema.metadata or {}
     spark_json = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
     if spark_json is not None:
         return T.StructType.fromJson(json.loads(spark_json))
+    leaves = (footer.schema.column(i).physical_type for i in range(len(footer.schema)))
+    schema = pa.schema(
+        [fld.with_type(_as_spark_reads(fld.type, leaves)) for fld in schema]
+    )
     ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
     return from_arrow_schema(schema, prefer_timestamp_ntz=ntz.lower() == "true")
+
+
+_UNSIGNED_AS_SPARK = {
+    pa.uint8(): pa.int16(),
+    pa.uint16(): pa.int32(),
+    pa.uint32(): pa.int64(),
+    pa.uint64(): pa.decimal128(20, 0),
+}
+
+
+def _as_spark_reads(t: pa.DataType, leaves: Iterator[str]) -> pa.DataType:
+    """Arrow type ``t`` with each leaf retyped as Spark reads its
+    parquet column. ``leaves`` yields the physical types of the
+    footer's leaf columns in order; Arrow's leaves come depth-first in
+    that same order."""
+    if pa.types.is_struct(t):
+        return pa.struct([fld.with_type(_as_spark_reads(fld.type, leaves)) for fld in t])
+    if pa.types.is_map(t):
+        key = t.key_field.with_type(_as_spark_reads(t.key_type, leaves))
+        item = t.item_field.with_type(_as_spark_reads(t.item_type, leaves))
+        return pa.map_(key, item)
+    if isinstance(t, (pa.ListType, pa.LargeListType, pa.FixedSizeListType)):
+        return pa.list_(t.value_field.with_type(_as_spark_reads(t.value_type, leaves)))
+    if next(leaves) == "INT96":
+        return pa.timestamp("ns", tz="UTC")
+    return _UNSIGNED_AS_SPARK.get(t, t)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

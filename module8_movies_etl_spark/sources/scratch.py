@@ -61,7 +61,6 @@ def mkscratch(prefix: str) -> str:
 def snapshot(
     df: DataFrame,
     prefix: str = "snap_",
-    root: str | None = None,
     rebalance: bool = True,
 ) -> DataFrame:
     """Write ``df`` to a fresh scratch parquet dir and return the
@@ -81,7 +80,7 @@ def snapshot(
     the standard production trade; pass ``rebalance=False`` when the
     input partitioning must be preserved byte-for-byte.
     """
-    path = tempfile.mkdtemp(prefix=prefix, dir=root or scratch_root())
+    path = tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
     out = df.hint("rebalance") if rebalance else df
     out.write.mode("overwrite").parquet(path)
     _LIVE.add(path)

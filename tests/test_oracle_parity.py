@@ -24,6 +24,17 @@ def test_all_queries_have_docstrings_and_run(spark, sf_dir):
         assert fn.__doc__, f"{name} missing docstring"
 
 
+def test_catalog_md_matches_registry():
+    """CATALOG.md is generated: it equals what the generator renders
+    from the live registry (``python tools/gen_catalog_md.py``)."""
+    import os
+
+    from tools.gen_catalog_md import ROOT, render
+
+    with open(os.path.join(ROOT, "CATALOG.md")) as fh:
+        assert fh.read() == render()
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, sf_dir, name):
     con = duckdb_con(sf_dir)

@@ -249,40 +249,6 @@ def test_orc_roundtrip_pushdown(spark, tmp_path):
     assert filtered.count() == o.filter(F.col("o_orderstatus") == "F").count()
 
 
-def test_binary_file_ingest_feeds_multimodal(spark, tmp_path):
-    """binaryFile source → opaque content column → the multimodal
-    feature stage: the files-on-disk ingest path for image/audio
-    blobs."""
-    from module8_movies_etl_spark.operators import multimodal
-    from module8_movies_etl_spark.sources import read_binary_files
-
-    blob_dir = tmp_path / "blobs"
-    blob_dir.mkdir()
-    payloads = {f"b{i}.bin": bytes([i]) * (100 + i) for i in range(5)}
-    for name, data in payloads.items():
-        (blob_dir / name).write_bytes(data)
-    (blob_dir / "ignore.txt").write_text("not a blob")
-
-    files = read_binary_files(spark, str(blob_dir), glob="*.bin")
-    assert files.count() == 5
-    # file paths keyed to a stable long id (FEATURE_SCHEMA contract)
-    named = files.select(
-        F.crc32(F.col("path")).cast("long").alias("doc_id"),
-        F.col("content").alias("payload"),
-    )
-    feats = multimodal.extract_media_features(
-        named, decoder=multimodal.fake_image_decoder
-    ).collect()
-    assert len(feats) == 5
-    assert all(64 <= r.width <= 319 for r in feats)
-    # content survives ingest byte-for-byte: recompute one feature row
-    import hashlib
-
-    one = sorted(payloads.items())[0][1]
-    h = hashlib.sha256(one).digest()
-    assert any(r.width == 64 + h[0] and r.height == 64 + h[1] for r in feats)
-
-
 def test_csv_json_sink_roundtrip(spark, tmp_path):
     """The reference's actual outputs were CSVs (.MISSING_LARGE_BLOBS);
     csv/json sinks round-trip values through their text encodings."""

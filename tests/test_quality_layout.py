@@ -146,25 +146,6 @@ def test_refresh_mv_matches_direct_aggregation(spark):
     assert m == d
 
 
-def test_audio_features_invariants(spark):
-    """Audio decode stage: schema + internal consistency (duration is
-    exactly n_samples/sample_rate; rates from the fixed palette)."""
-    from module8_movies_etl_spark.operators import multimodal
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
-    payload = d.withColumn("payload", F.encode("text", "UTF-8"))
-    out = multimodal.extract_media_features(
-        payload,
-        batch_decoder=multimodal.fake_audio_decoder_batch,
-        feature_schema=multimodal.AUDIO_FEATURE_SCHEMA,
-    ).collect()
-    assert len(out) == 50
-    for r in out:
-        assert r["sample_rate"] in (8000, 16000, 22050, 44100)
-        assert r["duration_s"] == r["n_samples"] / r["sample_rate"]
-        assert 0.0 <= r["rms"] <= 1.0
-
-
 def test_dp_geometric_mechanism_matches_python_replay(spark, sf_dir):
     """The DP release (round 9): noise must equal an independent
     plain-Python replay of the geometric mechanism's inverse CDF on

@@ -431,29 +431,6 @@ def test_null_prune_empty_input_keeps_nothing(spark):
     assert null_prune(df) == []
 
 
-def test_multimodal_null_payload_rows(spark):
-    """Review fix: NULL payloads emit NULL-feature rows / zero frames
-    instead of bytes(None) TypeErrors killing the stage."""
-    from module8_movies_etl_spark.operators.multimodal import (
-        extract_media_features,
-        fake_frame_sampler,
-        fake_image_decoder_batch,
-        sample_frames,
-    )
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"abc")), (2, None)], "doc_id long, payload binary"
-    )
-    feats = {r["doc_id"]: r for r in
-             extract_media_features(
-                 df, batch_decoder=fake_image_decoder_batch
-             ).collect()}
-    assert feats[1]["width"] is not None
-    assert feats[2]["width"] is None and feats[2]["mean_luma"] is None
-    frames = sample_frames(df, sampler=fake_frame_sampler).collect()
-    assert all(r["doc_id"] == 1 for r in frames) and len(frames) > 0
-
-
 def test_bloom_fp_rate_conditions_on_nonmembers(spark):
     from module8_movies_etl_spark.operators.sketches import bloom_build_probe
 

@@ -99,16 +99,31 @@ FROM range(5)
 
 def test_read_table_schema_matches_inference(spark, tmp_path):
     """``read_table``'s footer schema equals what ``spark.read.parquet``
-    infers, for the pyarrow-written test tables and for a Spark-written
-    table with every column family, under both timestamp-inference
+    infers, for the pyarrow-written test tables, for a Spark-written
+    table with every column family, and for a pyarrow-written table
+    whose physical types Arrow maps differently from Spark (unsigned
+    integers, INT96 timestamps), under both timestamp-inference
     settings."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     spark.sql(_TYPED_SQL).write.parquet(str(tmp_path / "t.parquet"))
+    unsigned = {f"c_uint{b}": pa.array([1, 2**b - 1], getattr(pa, f"uint{b}")())
+                for b in (8, 16, 32, 64)}
+    pq.write_table(
+        pa.table({**unsigned, "c_int96": [datetime.datetime(2020, 1, 1), None]}),
+        str(tmp_path / "u.parquet"),
+        use_deprecated_int96_timestamps=True,
+    )
     key = "spark.sql.parquet.inferTimestampNTZ.enabled"
     prev = spark.conf.get(key)
     try:
         for ntz in ("false", "true"):
             spark.conf.set(key, ntz)
-            for sf_dir, name in [(SF, n) for n in TPCH_TABLES] + [(str(tmp_path), "t")]:
+            local = [(str(tmp_path), "t"), (str(tmp_path), "u")]
+            for sf_dir, name in [(SF, n) for n in TPCH_TABLES] + local:
                 path = f"{sf_dir}/{name}.parquet"
                 got = read_table(spark, sf_dir, name)
                 assert got.schema == spark.read.parquet(path).schema, (ntz, name)
@@ -121,13 +136,14 @@ def test_read_table_schema_matches_inference(spark, tmp_path):
     assert dict(typed.dtypes)["c_timestamp_ntz"] == "timestamp_ntz"
 
 
-def test_snapshot_of_empty_frame_keeps_schema(spark, tmp_path):
+def test_snapshot_of_empty_frame_keeps_schema(spark, tmp_path, monkeypatch):
     """An empty snapshot still writes a footer, and the re-read takes
     its column names and types from it."""
     from module8_movies_etl_spark.sources.scratch import snapshot
 
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     df = spark.sql(_TYPED_SQL).limit(0)
-    out = snapshot(df, root=str(tmp_path))
+    out = snapshot(df)
     assert out.dtypes == df.dtypes
     assert out.count() == 0
 

@@ -8,7 +8,10 @@ from pyspark.sql import functions as F
 from module8_movies_etl_spark import streaming
 from module8_movies_etl_spark.operators import multimodal
 from module8_movies_etl_spark.sources import read_table
-from module8_movies_etl_spark.streaming.windows import run_to_memory
+from module8_movies_etl_spark.streaming.windows import (
+    run_to_memory,
+    scoped_shuffle_partitions,
+)
 
 SF = "/root/testdata/sf0.001"
 EVENTS = SF + "/events.parquet"
@@ -153,29 +156,31 @@ def test_event_replays_write_no_scratch(spark, tmp_path, monkeypatch):
     assert list(tmp_path.iterdir()) == []
 
 
-def test_multimodal_feature_extraction(spark):
-    docs = read_table(spark, SF, "documents").limit(50)
-    with_payload = docs.withColumn("payload", F.encode("text", "UTF-8"))
-    meta = multimodal.attach_payload_meta(with_payload, "payload", mime="text/plain")
-    m = meta.select("media_meta.*").first()
-    assert m.n_bytes > 0 and len(m.content_sha) == 64
-
-    feats = multimodal.extract_media_features(
-        with_payload, decoder=multimodal.fake_image_decoder
-    )
-    rows = feats.collect()
-    assert len(rows) == 50
-    assert all(64 <= r.width <= 319 and 1 <= r.n_channels <= 4 for r in rows)
-    # deterministic: same payload → same features
-    again = multimodal.extract_media_features(
-        with_payload, decoder=multimodal.fake_image_decoder
-    ).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    # the vectorized batch decoder is bit-identical to the row decoder
-    batched = multimodal.extract_media_features(
-        with_payload, batch_decoder=multimodal.fake_image_decoder_batch
-    ).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, batched))
+def test_scoped_shuffle_partitions_restores_caller_conf(spark):
+    """The caller's conf is unchanged after a scoped run: a value set
+    before comes back, also when the body raises, and a key unset
+    before is unset again."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "7")
+        with scoped_shuffle_partitions(spark, 3):
+            assert spark.conf.get(key) == "3"
+        assert spark.conf.get(key) == "7"
+        with pytest.raises(RuntimeError, match="body failed"):
+            with scoped_shuffle_partitions(spark):
+                assert spark.conf.get(key) == "16"
+                raise RuntimeError("body failed")
+        assert spark.conf.get(key) == "7"
+        spark.conf.unset(key)
+        with scoped_shuffle_partitions(spark):
+            assert spark.conf.get(key) == "16"
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_frame_sampling_fanout_and_determinism(spark):
@@ -196,32 +201,6 @@ def test_frame_sampling_fanout_and_determinism(spark):
         with_payload, sampler=multimodal.fake_frame_sampler
     ).collect()
     assert sorted(map(tuple, frames)) == sorted(map(tuple, again))
-
-
-def test_resize_stage_shapes(spark):
-    docs = read_table(spark, SF, "documents").limit(10)
-    with_payload = docs.withColumn("payload", F.encode("text", "UTF-8"))
-    rows = multimodal.resize_payloads(with_payload, 16, 9).collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert (r.width, r.height) == (16, 9)
-        assert len(bytes(r.payload)) == 16 * 9
-
-
-def test_frame_sample_stub_raises(spark):
-    docs = read_table(spark, SF, "documents").limit(1)
-    with_payload = docs.withColumn("payload", F.encode("text", "UTF-8"))
-    frames = multimodal.sample_frames(with_payload)  # default stub
-    with pytest.raises(Exception, match="NotImplementedError|frame sampling"):
-        frames.collect()
-
-
-def test_decode_stub_raises(spark):
-    docs = read_table(spark, SF, "documents").limit(1)
-    with_payload = docs.withColumn("payload", F.encode("text", "UTF-8"))
-    feats = multimodal.extract_media_features(with_payload)  # default stub
-    with pytest.raises(Exception, match="NotImplementedError|media decoding"):
-        feats.collect()
 
 
 def test_spectral_tone_features_closed_form_and_robustness():

@@ -13,10 +13,12 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def main() -> None:
+def render() -> str:
+    """CATALOG.md's text for the catalog as registered now."""
     from module8_movies_etl_spark.plans import benchmark_queries as bq
 
     lines = [
@@ -50,13 +52,14 @@ def main() -> None:
         first = first.replace("|", "\\|")
         family = family.replace("|", "\\|")
         lines.append(f"| {i} | `{name}` | {family} | {oracle} | {first} |")
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "CATALOG.md",
-    )
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    out = os.path.join(ROOT, "CATALOG.md")
     with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(bq.QUERIES)} rows)")
+        fh.write(render())
+    print(f"wrote {out}")
 
 
 if __name__ == "__main__":
