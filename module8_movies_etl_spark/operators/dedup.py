@@ -895,13 +895,10 @@ def connected_components(
     first.
     """
     from ..sources.readers import _footer_schema
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     spark = pairs.sparkSession
     scratch = mkscratch("cc_labels_")
-    # the final label snapshot backs the returned DataFrame — adopt
-    # the dir into the shared atexit reap instead of leaking it
-    register(scratch)
     # Materialize the edge list ONCE: ``pairs`` is usually the tail of
     # an expensive similarity pipeline, and without a snapshot every
     # propagation round would re-execute it from the scan (measured 6x

@@ -241,13 +241,13 @@ def month_partitioned_orders(spark, sf_dir: str) -> str:
     from pyspark.sql import functions as F
 
     from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     if sf_dir in _MONTH_PART_CACHE:
-        # liveness check: scratch.release()/external cleanup can delete
-        # the partition dirs out from under the cache — rebuild on miss
-        # instead of failing the read (hive layout: data files live
-        # under order_month=* subdirs, so walk rather than listdir)
+        # liveness check: external cleanup can delete the partition
+        # dirs out from under the cache — rebuild on miss instead of
+        # failing the read (hive layout: data files live under
+        # order_month=* subdirs, so walk rather than listdir)
         cached = _MONTH_PART_CACHE[sf_dir]
         if any(
             f.endswith(".parquet")
@@ -257,7 +257,6 @@ def month_partitioned_orders(spark, sf_dir: str) -> str:
             return cached
         del _MONTH_PART_CACHE[sf_dir]
     path = mkscratch("orders_bymonth_")
-    register(path)
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         "o_totalprice",

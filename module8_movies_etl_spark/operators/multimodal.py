@@ -1079,22 +1079,13 @@ GIF_FEATURE_SCHEMA = T.StructType(
 _SAMPLE_RATES = (8000, 16000, 22050, 44100)
 
 
-def make_wav(doc_id: int) -> bytes:
-    """Deterministic REAL RIFF/WAVE file: canonical 44-byte header
-    (PCM fmt chunk + data chunk) followed by mono 16-bit
-    little-endian samples — any audio player opens it. Sample rate,
-    frame count, and the two alternating sample amplitudes (+a on
-    even frames, −b on odd) derive from ``doc_id`` alone, giving the
-    decoded (rate, n, duration, rms) a closed form."""
+def _wav_bytes(rate: int, samples: list[int]) -> bytes:
+    """A canonical RIFF/WAVE file: the 44-byte header (PCM fmt chunk +
+    data chunk) followed by ``samples`` as mono 16-bit little-endian
+    frames."""
     import struct
 
-    rate = _SAMPLE_RATES[doc_id % 4]
-    n = 100 + doc_id % 157
-    a = doc_id % 900 + 1
-    b = doc_id % 700 + 2
-    frames = struct.pack(
-        f"<{n}h", *[a if k % 2 == 0 else -b for k in range(n)]
-    )
+    frames = struct.pack(f"<{len(samples)}h", *samples)
     fmt_chunk = b"fmt " + struct.pack(
         "<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16
     )
@@ -1103,18 +1094,11 @@ def make_wav(doc_id: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def decode_wav(payload: bytes) -> dict[str, Any]:
-    """REAL WAV decoder (pure Python): validates the RIFF/WAVE
-    container, walks the chunk list (honoring the spec's odd-size pad
-    byte) to find ``fmt `` and ``data``, reads (format, channels,
-    rate, bits) from the fmt chunk, and computes frame count,
-    duration, and RMS from the actual int16 sample bytes. PCM-16 only
-    — a compressed codec raises ``ValueError``; it needs its own
-    decoder.
-
-    ``duration_s``/``rms`` are raw IEEE divisions over exact integer
-    sums, bit-identical to an oracle's closed form."""
-    import math
+def _wav_pcm16(payload: bytes) -> tuple[int, int, int, int, bytes]:
+    """Walk a RIFF/WAVE payload's chunk list (honoring the spec's
+    odd-size pad byte) and return ``(format tag, channels, rate, bits,
+    data bytes)`` from its ``fmt `` and ``data`` chunks. Each reader
+    then checks the encoding is the PCM-16 layout it supports."""
     import struct
 
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
@@ -1132,6 +1116,38 @@ def decode_wav(payload: bytes) -> dict[str, Any]:
         raise ValueError("WAV missing fmt/data chunk")
     audio_fmt, channels, rate = struct.unpack_from("<HHI", fmt, 0)
     (bits,) = struct.unpack_from("<H", fmt, 14)
+    return audio_fmt, channels, rate, bits, data
+
+
+def make_wav(doc_id: int) -> bytes:
+    """Deterministic REAL RIFF/WAVE file: canonical 44-byte header
+    (PCM fmt chunk + data chunk) followed by mono 16-bit
+    little-endian samples — any audio player opens it. Sample rate,
+    frame count, and the two alternating sample amplitudes (+a on
+    even frames, −b on odd) derive from ``doc_id`` alone, giving the
+    decoded (rate, n, duration, rms) a closed form."""
+    rate = _SAMPLE_RATES[doc_id % 4]
+    n = 100 + doc_id % 157
+    a = doc_id % 900 + 1
+    b = doc_id % 700 + 2
+    return _wav_bytes(rate, [a if k % 2 == 0 else -b for k in range(n)])
+
+
+def decode_wav(payload: bytes) -> dict[str, Any]:
+    """REAL WAV decoder (pure Python): validates the RIFF/WAVE
+    container, walks the chunk list (honoring the spec's odd-size pad
+    byte) to find ``fmt `` and ``data``, reads (format, channels,
+    rate, bits) from the fmt chunk, and computes frame count,
+    duration, and RMS from the actual int16 sample bytes. PCM-16 only
+    — a compressed codec raises ``ValueError``; it needs its own
+    decoder.
+
+    ``duration_s``/``rms`` are raw IEEE divisions over exact integer
+    sums, bit-identical to an oracle's closed form."""
+    import math
+    import struct
+
+    audio_fmt, channels, rate, bits, data = _wav_pcm16(payload)
     if audio_fmt != 1 or bits != 16:
         raise ValueError(
             f"decode_wav supports PCM-16 only (got fmt={audio_fmt}, "
@@ -1160,21 +1176,12 @@ def make_wav_tone(doc_id: int, n: int = 256) -> bytes:
     fundamental (aliased copies included), so the spectral argmax is
     bin k with a 3× margin — a closed form the oracle can state while
     the decoder still has to run a genuine FFT to find it."""
-    import struct
-
     rate = _SAMPLE_RATES[doc_id % 4]
     k = 1 + doc_id % (n // 2 - 2)
     a = 1000 + (doc_id % 200) * 93
-    samples = [
-        a if (2 * k * t) % (2 * n) < n else -a for t in range(n)
-    ]
-    frames = struct.pack(f"<{n}h", *samples)
-    fmt_chunk = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16
+    return _wav_bytes(
+        rate, [a if (2 * k * t) % (2 * n) < n else -a for t in range(n)]
     )
-    data_chunk = b"data" + struct.pack("<I", len(frames)) + frames
-    body = b"WAVE" + fmt_chunk + data_chunk
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def spectral_wav_features(payload: bytes) -> dict[str, Any]:
@@ -1188,25 +1195,9 @@ def spectral_wav_features(payload: bytes) -> dict[str, Any]:
     bin = k, hz = k·rate/n, power = n·A² — an implementation that
     windows away the fundamental, misindexes rfft's output, or drops
     the DC exclusion hash-mismatches. PCM-16 mono only."""
-    import struct
-
     import numpy as np
 
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if cid == b"fmt ":
-            fmt = payload[pos + 8 : pos + 8 + size]
-        elif cid == b"data":
-            data = payload[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_fmt, channels, rate = struct.unpack_from("<HHI", fmt, 0)
-    (bits,) = struct.unpack_from("<H", fmt, 14)
+    audio_fmt, channels, rate, bits, data = _wav_pcm16(payload)
     if audio_fmt != 1 or bits != 16 or channels != 1:
         raise ValueError("spectral_wav_features supports mono PCM-16 only")
     n = len(data) // 2
@@ -1254,21 +1245,7 @@ def downsample_wav_half(payload: bytes) -> dict[str, Any]:
     import math
     import struct
 
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if cid == b"fmt ":
-            fmt = payload[pos + 8 : pos + 8 + size]
-        elif cid == b"data":
-            data = payload[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_fmt, channels, rate = struct.unpack_from("<HHI", fmt, 0)
-    (bits,) = struct.unpack_from("<H", fmt, 14)
+    audio_fmt, channels, rate, bits, data = _wav_pcm16(payload)
     if audio_fmt != 1 or bits != 16 or channels != 1:
         raise ValueError(
             "downsample_wav_half supports mono PCM-16 only "

@@ -180,7 +180,11 @@ def kaggle_transform(kaggle: DataFrame) -> DataFrame:
     100 TB job on one bad cell). Callers who need the reference's
     raise semantics run ``casts.strict_cast_audit`` on the raw frame
     and gate on the audit column — this path deliberately does not,
-    so a NULL kaggle_id silently misses the histogram join."""
+    so a NULL kaggle_id silently misses the histogram join.
+
+    Every numeric column is cast, so a frame read as strings gets the
+    inferred read's schema and C7 fills (which skip non-numeric ones)."""
+    doubles = ("popularity", "runtime", "revenue", "vote_average", "vote_count")
     out = kaggle.filter(F.col("adult") == "False").drop("adult")
     return (
         out.withColumn("video", casts.coerce_bool(F.col("video")))
@@ -188,7 +192,7 @@ def kaggle_transform(kaggle: DataFrame) -> DataFrame:
         .drop("budget")
         .withColumn("kaggle_id", F.col("id").try_cast("long"))
         .drop("id")
-        .withColumn("popularity", F.col("popularity").try_cast("double"))
+        .withColumns({c: F.col(c).try_cast("double") for c in doubles})
         .withColumn(
             "release_date_kaggle",
             F.try_to_timestamp(F.col("release_date"), F.lit("yyyy-MM-dd")).cast("date"),
@@ -199,16 +203,14 @@ def kaggle_transform(kaggle: DataFrame) -> DataFrame:
 
 def rating_histogram(ratings: DataFrame) -> DataFrame:
     """Stage 4 (reference ``challenge.py:293-296``): per-movie rating
-    histogram. A1 + V1 fused into one pivot-count, which plans two
-    exchanges: a (movieId, rating) count aggregate, then the pivot's
-    regroup on movieId. V2's float-derived names (``rating_0.5``…) are
-    pinned with an explicit value domain so the output schema is
-    plan-time stable."""
+    histogram. A1 + V1 fused into one conditional count per value of
+    the known domain: one exchange on movieId, and V2's float-derived
+    names (``rating_0.5``…) are plan-time stable. A movie with no rating
+    of some value counts 0, as ``merge_movies``' C8 zero-fill makes it."""
     rating_values = [0.5, 1.0, 1.5, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5, 5.0]
-    hist = pivot.pivot_count(
+    return pivot.pivot_count_fixed(
         ratings, "movieId", "rating", values=rating_values, prefix="rating_"
     )
-    return hist
 
 
 def merge_movies(

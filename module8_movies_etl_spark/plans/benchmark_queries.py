@@ -12172,10 +12172,9 @@ def json_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     scratch = mkscratch("json_corrupt_")
-    register(scratch)
     path = os.path.join(scratch, "lines")
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -12248,10 +12247,9 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     scratch = mkscratch("schema_evo_")
-    register(scratch)
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -12995,11 +12993,10 @@ def pyds_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources import pyds
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     pyds.register_sink(spark)
     scratch = mkscratch("manifest_sink_")
-    register(scratch)
     out = os.path.join(scratch, "out")
     d = read_table(spark, sf_dir, "documents").select(
         text.fingerprint(F.col("text")).alias("f")
@@ -17818,12 +17815,11 @@ def pyds_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources import pyds
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     pyds.register_stream(spark)
     pyds.register_stream_sink(spark)
     scratch = mkscratch("stream_sink_")
-    register(scratch)
     out = os.path.join(scratch, "out")
     os.makedirs(out, exist_ok=True)
     src = (

@@ -114,10 +114,7 @@ def get_spark(
         # Spark's default, bounded heap); the bench/scale harnesses
         # pass 4096 via extra_conf because their 266-query loop
         # re-executes the same stages and has heap headroom.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "1024"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # Shuffle/spill files on RAM-backed storage when available:
         # local-mode shuffle volumes are small, and keeping them off
         # the (shared) data disk removes I/O-contention variance. A

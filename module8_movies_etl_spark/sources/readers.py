@@ -168,8 +168,9 @@ def read_csv(
 
     ``low_memory=False`` in the reference (``challenge.py:47``) exists
     because pandas infers dtypes chunk-by-chunk; Spark's two-pass
-    inference has no such failure mode, and an explicit schema skips
-    the extra pass entirely (the production default here).
+    inference has no such failure mode. The default infers the schema
+    (one extra scan); pass ``schema`` to skip that pass, or
+    ``infer_schema=False`` to read every column as a string.
     """
     reader = spark.read.option("header", str(header).lower())
     if schema is not None:

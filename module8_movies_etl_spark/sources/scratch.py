@@ -9,53 +9,101 @@ boundaries; this module is the ONE implementation of that idiom
 (connected components, the shingle-postings index, and the curation
 capstone all route through it).
 
-Lifecycle: the returned DataFrame reads the written files lazily,
-with its schema pinned from their footer (the re-read starts no Spark
-job), so a snapshot cannot be deleted at call time. Every snapshot
-dir is registered and reaped at interpreter exit (atexit), bounding
-accumulation to one process's working set. Callers that finish with a
-snapshot early can ``release()`` it explicitly.
+Lifecycle: all scratch of a process lives under one root,
+``<scratch_root()>/graft-<pid>-<random>/``, on which the process holds
+an exclusive ``flock`` while it lives (forked children share it). The
+first ``mkscratch`` or ``snapshot`` in a base dir makes the root after
+reaping every ``graft-<pid>-*`` sibling whose lock is free: its owner
+died without running its exit hook (SIGKILL, OOM kill). The kernel
+frees the lock in any pid namespace, so no live owner's root is taken
+for dead. The owner removes its root at exit (atexit); a forked child
+never removes its parent's. A snapshot reads its files lazily, with
+the schema pinned from their footer, so it lives until its process
+exits.
 
-Deployment note: ``tempfile.mkdtemp`` is DRIVER-local, which is
-correct for this engine's local-mode target; a multi-node deployment
-must point ``scratch_root`` at a shared filesystem mounted on every
-node (executors write and read the snapshot; the driver reads only
-its footer, through a local path, to pin the re-read's schema).
+Deployment note: the root is DRIVER-local, which is correct for this
+engine's local-mode target; a multi-node deployment must point
+``SPARK_GRAFT_SCRATCH`` at a shared filesystem mounted on every node
+(executors write and read the snapshot; the driver reads only its
+footer, through a local path, to pin the re-read's schema), one whose
+``flock`` spans hosts (NFSv4) — else each host needs its own base.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
+import fcntl
 import os
+import re
 import shutil
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame
 
 from .readers import _footer_schema
 
-_LIVE: set[str] = set()
+_ROOTS: dict[str, tuple[str, int]] = {}  # base dir -> (root, fd holding its lock)
+_ROOTS_LOCK = threading.Lock()
+os.register_at_fork(after_in_child=_ROOTS.clear)
 
 
-def scratch_root() -> str | None:
-    """Root for scratch dirs: ``$SPARK_GRAFT_SCRATCH`` if set, else
+def scratch_root() -> str:
+    """Base dir for scratch roots: ``$SPARK_GRAFT_SCRATCH`` if set, else
     ``/dev/shm`` when available (RAM-backed — stage snapshots are
     small and transient, and keeping them off the data disk removes
     I/O contention with co-tenant load), else the system tmpdir.
-    A cluster deployment overrides with a shared-filesystem URI."""
+    A cluster deployment overrides with a shared-filesystem path."""
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
         return env
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         return "/dev/shm"
-    return None  # tempfile default
+    return tempfile.gettempdir()
+
+
+def _reap(base: str) -> None:
+    """Remove the ``graft-<pid>-*`` roots in ``base`` whose lock is free."""
+    for name in os.listdir(base):
+        path = os.path.join(base, name)
+        if re.fullmatch(r"graft-\d+-\w+", name):
+            with contextlib.suppress(OSError):  # held, or removed meanwhile
+                fd = os.open(path, os.O_RDONLY)
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    shutil.rmtree(path, ignore_errors=True)
+                finally:
+                    os.close(fd)
+
+
+def _process_root() -> str:
+    """This process's locked root under ``scratch_root()``, made on
+    first use and again if an external cleanup removed it."""
+    base = scratch_root()
+    with _ROOTS_LOCK:
+        root, fd = _ROOTS.get(base, ("", -1))
+        if root:
+            with contextlib.suppress(FileNotFoundError):
+                if os.path.samestat(os.stat(root), os.fstat(fd)):
+                    return root
+            os.close(fd)
+        os.makedirs(base, exist_ok=True)
+        _reap(base)
+        # lock under a name the reaper skips, then publish by rename
+        hidden = tempfile.mkdtemp(prefix=f".graft-{os.getpid()}-", dir=base)
+        fd = os.open(hidden, os.O_RDONLY)
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        root = os.path.join(base, os.path.basename(hidden)[1:])
+        os.rename(hidden, root)
+        _ROOTS[base] = (root, fd)
+        return root
 
 
 def mkscratch(prefix: str) -> str:
-    """Create (and return) a scratch dir under ``scratch_root()``.
-    The caller owns cleanup — or calls ``register`` to defer it to
-    the atexit reap."""
-    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+    """Create (and return) a scratch dir under this process's root,
+    which is removed with everything in it at interpreter exit."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_process_root())
 
 
 def snapshot(
@@ -80,10 +128,9 @@ def snapshot(
     the standard production trade; pass ``rebalance=False`` when the
     input partitioning must be preserved byte-for-byte.
     """
-    path = tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+    path = mkscratch(prefix)
     out = df.hint("rebalance") if rebalance else df
     out.write.mode("overwrite").parquet(path)
-    _LIVE.add(path)
     spark = df.sparkSession
     return spark.read.schema(_footer_schema(spark, path)).parquet(path)
 
@@ -125,25 +172,8 @@ def local_snapshot(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def register(path: str) -> None:
-    """Adopt an externally created scratch dir into the atexit reap
-    (for multi-file lifecycles like the connected-components label
-    iteration that manage their own intermediate files)."""
-    _LIVE.add(path)
-
-
-def release(df_path_or_all: str | None = None) -> None:
-    """Delete one snapshot dir (by path) or, with no argument, all of
-    this process's live snapshots. Only for callers that KNOW no live
-    DataFrame still reads the files."""
-    targets = [df_path_or_all] if df_path_or_all else list(_LIVE)
-    for p in targets:
-        shutil.rmtree(p, ignore_errors=True)
-        _LIVE.discard(p)
-
-
 @atexit.register
-def _reap() -> None:
-    for p in list(_LIVE):
-        shutil.rmtree(p, ignore_errors=True)
-    _LIVE.clear()
+def _remove_roots() -> None:
+    for root, fd in _ROOTS.values():
+        shutil.rmtree(root, ignore_errors=True)
+        os.close(fd)

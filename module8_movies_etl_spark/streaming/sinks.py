@@ -49,14 +49,10 @@ def run_upsert_foreachbatch(
     sink (multiple micro-batches via ``maxFilesPerTrigger``) and
     return the final per-user state table."""
     from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     scratch = mkscratch("fb_upsert_stream_")
     state_root = mkscratch("fb_upsert_state_")
-    # the state root holds every v{batch_id} version plus the
-    # checkpoint and outlives this function (the returned DataFrame
-    # reads it lazily) — register it so the atexit reaper reclaims it
-    register(state_root)
     # 4 input files → availableNow processes them as several
     # micro-batches (maxFilesPerTrigger=1), exercising the incremental
     # merge path rather than a single-batch degenerate run

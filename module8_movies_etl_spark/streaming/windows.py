@@ -239,9 +239,9 @@ _IJ_SCRATCH_CACHE: dict = {}
 def _scratch_has_data(path: str) -> bool:
     """True iff ``path`` holds at least one parquet DATA file — the
     cache-liveness check for the interval-join scratch pair. A bare
-    ``isdir`` is not enough: a ``scratch.release()`` (or partial
-    external cleanup) that empties the directory without removing it
-    would otherwise stream an empty source instead of rebuilding."""
+    ``isdir`` is not enough: a partial external cleanup that empties
+    the directory without removing it would otherwise stream an empty
+    source instead of rebuilding."""
     try:
         return any(
             f.name.endswith(".parquet") and f.is_file()
@@ -349,7 +349,7 @@ def ensure_ij_scratches(
     time that read as a query regression.
     """
     from ..sources.readers import read_table
-    from ..sources.scratch import mkscratch, register
+    from ..sources.scratch import mkscratch
 
     base = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
@@ -385,9 +385,9 @@ def ensure_ij_scratches(
     if entry is not None and not all(
         _scratch_has_data(scratch) for scratch, _ in entry.values()
     ):
-        # a scratch.release() (or external cleanup) deleted the dirs
-        # or their contents out from under the cache — rebuild
-        # instead of streaming a missing/empty source
+        # external cleanup deleted the dirs or their contents out
+        # from under the cache — rebuild instead of streaming a
+        # missing/empty source
         entry = None
     if entry is None:
         max_ts = base.agg(F.max("ts")).collect()[0][0]
@@ -400,7 +400,6 @@ def ensure_ij_scratches(
             ("r", right_type, -2),
         ):
             scratch = mkscratch(f"stream_ij_{side}_")
-            register(scratch)
             part = base.filter(
                 F.col("event_type") == etype
             ).drop("event_type")

@@ -176,7 +176,7 @@ def write_kaggle_csv(path: str) -> None:
             "title": f"Movie {n:02d}",
             "video": "False",
             "vote_average": str(5.0 + n / 10),
-            "vote_count": str(100 * n),
+            "vote_count": f"{100 * n}.0",
         }
         base.update(kw)
         return base

@@ -156,3 +156,18 @@ class TestMergedOutput:
         # Q1: ratings keep raw unix seconds (int), no timestamp column
         dtypes = dict(outputs["ratings"].dtypes)
         assert dtypes["timestamp"] in ("int", "bigint")
+
+    def test_string_read_kaggle_matches_inferred(self, spark, inputs, outputs, tmp_path):
+        # the Kaggle CSV read as strings (then cast, as FIXTURES.md
+        # describes) fills C7 and types its output as the inferred read
+        path = str(tmp_path / "movies_metadata.csv")
+        fixtures.write_kaggle_csv(path)
+        kaggle = read_csv(spark, path, infer_schema=False)
+        df = movies_etl.run_pipeline(inputs[0], kaggle, inputs[2])["movies_ratings"]
+        assert _by_imdb(df, 2).budget == pytest.approx(200e6)
+        assert _by_imdb(df, 3).runtime == pytest.approx(104.0)
+        assert _by_imdb(df, 5).revenue == pytest.approx(21.4e6)
+        assert _by_imdb(df, 4).revenue is None  # Q2
+        assert _by_imdb(df, 5).vote_count == pytest.approx(500.0)
+        assert dict(df.dtypes)["vote_count"] == "double"
+        assert df.schema == outputs["movies_ratings"].schema

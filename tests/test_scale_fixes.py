@@ -136,18 +136,6 @@ def test_read_table_schema_matches_inference(spark, tmp_path):
     assert dict(typed.dtypes)["c_timestamp_ntz"] == "timestamp_ntz"
 
 
-def test_snapshot_of_empty_frame_keeps_schema(spark, tmp_path, monkeypatch):
-    """An empty snapshot still writes a footer, and the re-read takes
-    its column names and types from it."""
-    from module8_movies_etl_spark.sources.scratch import snapshot
-
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
-    df = spark.sql(_TYPED_SQL).limit(0)
-    out = snapshot(df)
-    assert out.dtypes == df.dtypes
-    assert out.count() == 0
-
-
 def test_register_tables_skips_missing_but_raises_on_corrupt(spark, tmp_path):
     """A missing table stays unregistered; a present but unreadable
     one is an error, not a silently missing view."""
