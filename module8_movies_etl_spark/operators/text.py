@@ -800,7 +800,7 @@ def bpe_learn(
     ``F.aggregate`` fold over the symbol arrays, and the segmentation
     localCheckpoints per round (lineage cut without the filesystem
     round-trip — re-deriving round r from round 0 would recompute r
-    nested folds; see the r11 note in ``_bpe_rounds``).
+    nested folds; see the r11 note in the loop).
 
     At real scale the vocabulary table is millions of rows: every
     per-round stage here is vocab-grain and shuffle-light, which is
@@ -812,7 +812,6 @@ def bpe_learn(
     by the catalog oracle.
     """
     from ..sources.scratch import snapshot
-    from ..streaming.windows import scoped_shuffle_partitions
 
     spark = df.sparkSession
     wf = (
@@ -827,22 +826,12 @@ def bpe_learn(
         .select("w", "n", F.split(F.col("w"), "").alias("syms")),
         prefix="bpe_seg_",
     )
-    merges: list[tuple[int, str, str, str, int]] = []
-    # The loop's jobs all run on the top_words-row working set — at
-    # the session's fact-scale shuffle width each round pays ~30 idle
-    # tasks of pure scheduling overhead (measured 2× the whole loop).
-    # Scope the rounds narrow; the fact-sized word count above already
-    # ran at full width.
-    with scoped_shuffle_partitions(spark, 2):
-        merges = _bpe_rounds(spark, seg, n_merges)
-    return spark.createDataFrame(
-        merges or [],
-        "rank int, lhs string, rhs string, merged string, score bigint",
-    )
-
-
-def _bpe_rounds(spark, seg, n_merges: int):
-    """The per-round argmax + in-plan merge loop of ``bpe_learn``."""
+    # The loop's jobs all run on the top_words-row working set, so it
+    # runs as one partition: at the session's fact-scale width each
+    # round paid ~30 idle tasks of pure scheduling overhead (measured
+    # 2× the whole loop). The fact-sized word count above already ran
+    # at full width.
+    seg = seg.coalesce(1)
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         pairs = seg.filter(F.size("syms") >= 2).select(
@@ -879,7 +868,10 @@ def _bpe_rounds(spark, seg, n_merges: int):
         seg = seg.select(
             "w", "n", apply_bpe_merge(F.col("syms"), a, b).alias("syms")
         ).localCheckpoint(eager=True)
-    return merges
+    return spark.createDataFrame(
+        merges or [],
+        "rank int, lhs string, rhs string, merged string, score bigint",
+    )
 
 
 def apply_bpe_merge(syms: Column, a: str, b: str) -> Column:

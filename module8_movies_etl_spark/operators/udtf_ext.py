@@ -48,23 +48,17 @@ class ChunkSplit:
             yield i // self.WIDTH, " ".join(toks[i : i + self.WIDTH])
 
 
-_VIEW_SEQ = __import__("itertools").count()
-
-
 def chunk_rows_udtf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, pos, chunk) rows via the UDTF lateral join.
 
-    The source view name is unique per CALL (process-wide counter +
-    the DataFrame's identity), never derived from the column names
-    alone: two frames sharing column names would otherwise race on
-    ``createOrReplaceTempView`` and one query could silently read the
-    other's data. Column names are backtick-quoted in the SQL.
+    The source frame is bound as a ``spark.sql`` argument, so it needs
+    no name in the session catalog and adds no view to it. Column
+    names are backtick-quoted in the SQL.
     """
     spark = df.sparkSession
     spark.udtf.register("chunk_split", ChunkSplit)
-    view = f"_udtf_src_{next(_VIEW_SEQ)}_{id(df) & 0xFFFF:x}"
-    df.select(id_col, text_col).createOrReplaceTempView(view)
     return spark.sql(
         f"SELECT s.`{id_col}`, c.pos, c.chunk "
-        f"FROM {view} s, LATERAL chunk_split(`{text_col}`) c"
+        f"FROM {{src}} s, LATERAL chunk_split(`{text_col}`) c",
+        src=df.select(id_col, text_col),
     )

@@ -20,7 +20,6 @@ Operator → query coverage is written next to each entry as
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -17730,8 +17729,6 @@ SELECT CAST(i % 10 AS BIGINT) AS bucket,
 FROM t GROUP BY 1
 """
 
-_PYDS_STREAM_SEQ = itertools.count()
-
 
 @query("pyds_stream_ticks", _PYDS_STREAM_ORACLE)
 def pyds_stream_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -17750,11 +17747,12 @@ def pyds_stream_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming connector is value-verified end to end.
     """
     from ..sources.pyds import register_stream
-    from ..streaming.windows import scoped_shuffle_partitions
+    from ..streaming.windows import stream_session
 
-    register_stream(spark)
+    child = stream_session(spark, 8)
+    register_stream(child)
     src = (
-        spark.readStream.format("grafttick")
+        child.readStream.format("grafttick")
         .option("rows", 2000)
         .option("batch", 500)
         .load()
@@ -17763,20 +17761,18 @@ def pyds_stream_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("v").alias("total_v"),
     )
-    sink = f"pyds_ticks_{next(_PYDS_STREAM_SEQ)}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(sink)
+    q = (
+        agg.writeStream.format("memory")
+        .queryName("pyds_ticks")
+        .outputMode("complete")
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return child.table("pyds_ticks")
 
 
 _PYDS_SINK_ORACLE = """

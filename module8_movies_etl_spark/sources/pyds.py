@@ -243,8 +243,23 @@ class GraftTickDataSource(DataSource):
 
 
 def register_stream(spark) -> None:
-    """Idempotently register the grafttick streaming source."""
-    spark.dataSource.register(GraftTickDataSource)
+    """Idempotently register the grafttick streaming source in ``spark``.
+
+    Spark refuses a registration whose name the thread's ACTIVE session
+    already has, even when ``spark`` lacks it: a child session (see
+    ``streaming.windows.stream_session``) of a caller that registered
+    the source could not register it. So ``spark`` is the active
+    session for the registration, and the previous one is restored."""
+    sessions = getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession")
+    prev = sessions.getActiveSession()
+    sessions.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(GraftTickDataSource)
+    finally:
+        if prev.isDefined():
+            sessions.setActiveSession(prev.get())
+        else:
+            sessions.clearActiveSession()
 
 
 # --------------------------------------------------------------------------

@@ -12,19 +12,12 @@ batch ``exact_dedup`` operator's job; this one serves the ingest path).
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import (
-    read_event_stream,
-    run_to_memory,
-    scoped_shuffle_partitions,
-)
-
-_SINK_SEQ = itertools.count()
+from .windows import read_event_stream, run_to_memory, stream_session
 
 # Declared stream types of the events columns a dedup key can name.
 _EVENT_TYPES = {
@@ -71,16 +64,10 @@ def run_dedup_over_events(
     keys = keys or ["user_id", "event_type"]
     schema = ", ".join(f"{k} {_EVENT_TYPES[k]}" for k in keys)
     stream = read_event_stream(
-        spark,
+        stream_session(spark),
         os.path.join(sf_dir, "events.parquet"),
         schema=f"{schema}, ts timestamp",
     )
     deduped = dedup_stream(stream, keys, delay=delay)
-    # Stateful streams commit one state-store partition per shuffle
-    # partition per micro-batch; a default-conf session (200) spends
-    # more time on store commits than on data (same scoping as
-    # streaming.stateful). The conf is read at query start — scope it.
-    sink = f"stream_dedup_events_{next(_SINK_SEQ)}"
-    with scoped_shuffle_partitions(spark, 16):
-        run_to_memory(deduped, sink, output_mode="append")
-    return spark.table(sink).select(*[F.col(k) for k in keys])
+    out = run_to_memory(deduped, "stream_dedup_events", output_mode="append")
+    return out.select(*[F.col(k) for k in keys])

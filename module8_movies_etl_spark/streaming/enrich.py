@@ -16,19 +16,12 @@ oracle (same replay discipline as ``streaming.dedup``).
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import (
-    read_event_stream,
-    run_to_memory,
-    scoped_shuffle_partitions,
-)
-
-_SINK_SEQ = itertools.count()
+from .windows import read_event_stream, run_to_memory, stream_session
 
 
 def enrich_stream(
@@ -60,24 +53,21 @@ def run_enrich_over_events(
     """
     from ..sources.readers import read_table
 
+    child = stream_session(spark)
     # A plain stateless join: no watermark, so ts is not read.
     stream = read_event_stream(
-        spark,
+        child,
         os.path.join(sf_dir, "events.parquet"),
         schema=(
             "event_id bigint, user_id bigint, event_type string, value double"
         ),
     )
 
-    dim = read_table(spark, sf_dir, "customer").select(
+    dim = read_table(child, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("mktsegment"),
     )
     enriched = enrich_stream(stream, dim, on="user_id").select(
         "event_id", "user_id", "event_type", "mktsegment", "value"
     )
-
-    sink = f"stream_enrich_events_{next(_SINK_SEQ)}"
-    with scoped_shuffle_partitions(spark, 16):
-        run_to_memory(enriched, sink, output_mode="append")
-    return spark.table(sink)
+    return run_to_memory(enriched, "stream_enrich_events", output_mode="append")

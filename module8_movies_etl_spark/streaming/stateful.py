@@ -58,11 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import (
-    read_event_stream,
-    run_to_memory,
-    scoped_shuffle_partitions,
-)
+from .windows import read_event_stream, run_to_memory, stream_session
 
 SESSION_OUT_SCHEMA = (
     "user_id bigint, session_start_s bigint, session_end_s bigint, n_events bigint"
@@ -151,16 +147,12 @@ def sessionize_stateful(
     )
 
 
-_SINK_SEQ = __import__("itertools").count()
-
-
-
-def _replay_events_stream(spark, sf_dir, schema, transform, query_name):
+def _replay_events_stream(spark, sf_dir, schema, transform, sink):
     """Shared finite-replay mechanics for every custom stateful
     operator runner (sessionize / KMV / CMS): stream the events table
     where it lives with the declared ``schema``, run ``transform``'s
-    stateful plan to completion with availableNow into a memory sink,
-    and return the materialized table.
+    stateful plan to completion with availableNow into the memory sink
+    ``sink``, and return the materialized table.
 
     Why each piece is the way it is (fixes here apply to ALL
     runners — that is the point of sharing them):
@@ -177,26 +169,26 @@ def _replay_events_stream(spark, sf_dir, schema, transform, query_name):
       makes the finite-input result equal the batch twin (the
       production posture for live data is a real watermark delay,
       not 0 seconds).
-    - ``scoped_shuffle_partitions(16)``: a stateful stream
-      materializes one state-store partition per shuffle partition
-      PER micro-batch; under a default-conf session (200) that is
-      400 store commits for this replay — measured 6x slower than
-      the data warrants. The conf is read at query start, so it is
-      scoped to the stream and restored after.
+    - A child session (``stream_session``) at 16 shuffle partitions:
+      a stateful stream materializes one state-store partition per
+      shuffle partition PER micro-batch; under a default-conf session
+      (200) that is 400 store commits for this replay — measured 6x
+      slower than the data warrants. The child carries the caller's
+      conf plus that width, and the sink's view lives in the child's
+      catalog, so the caller's session is never written.
     """
     stream = read_event_stream(
-        spark, os.path.join(sf_dir, "events.parquet"), schema=schema
+        stream_session(spark),
+        os.path.join(sf_dir, "events.parquet"),
+        schema=schema,
     )
-    with scoped_shuffle_partitions(spark, 16):
-        run_to_memory(transform(stream), query_name, output_mode="append")
-    return spark.table(query_name)
+    return run_to_memory(transform(stream), sink, output_mode="append")
 
 
 def run_sessionize_over_events(
     spark: SparkSession,
     sf_dir: str,
     gap_s: int = 1800,
-    query_name: str | None = None,
 ) -> DataFrame:
     """Replay the finite ``events`` table through the stateful
     sessionizer with ``trigger(availableNow=True)`` into a memory sink;
@@ -206,16 +198,14 @@ def run_sessionize_over_events(
     watermark, micro-batches — driven to completion over fixed input,
     which is what makes the operator oracle-checkable. The replay
     mechanics (in-place stream, declared schema, single micro-batch,
-    scoped shuffle partitions) and their rationale live in
-    ``_replay_events_stream``, shared with the KMV and CMS runners.
+    a child session at 16 shuffle partitions) and their rationale live
+    in ``_replay_events_stream``, shared with the KMV and CMS runners.
     """
-    if query_name is None:
-        query_name = f"sessionize_stateful_sink_{next(_SINK_SEQ)}"
     return _replay_events_stream(
         spark, sf_dir,
         "user_id bigint, ts timestamp",
         lambda stream: sessionize_stateful(stream, gap_s=gap_s),
-        query_name,
+        "sessionize_stateful_sink",
     )
 
 
@@ -312,20 +302,17 @@ def run_kmv_over_events(
     spark: SparkSession,
     sf_dir: str,
     k: int = 64,
-    query_name: str | None = None,
 ) -> DataFrame:
     """Replay the finite events table through the streaming KMV sketch
     (same in-place stream + availableNow + memory-sink mechanics as
     ``run_sessionize_over_events``) and return the final per-key
     estimates, rounded like the batch query so the BATCH oracle
     applies verbatim."""
-    if query_name is None:
-        query_name = f"kmv_stateful_sink_{next(_SINK_SEQ)}"
     result = _replay_events_stream(
         spark, sf_dir,
         "event_type string, ts timestamp, user_id bigint",
         lambda stream: kmv_stateful(stream, k=k),
-        query_name,
+        "kmv_stateful_sink",
     )
     return result.select(
         "event_type",
@@ -425,19 +412,16 @@ def run_cms_over_events(
     sf_dir: str,
     depth: int = 4,
     width: int = 256,
-    query_name: str | None = None,
 ) -> DataFrame:
     """Replay the finite events table through the streaming CMS
     (in-place stream + availableNow + memory-sink mechanics shared
     with the KMV runner) and return each event type's final non-zero
     grid cells."""
-    if query_name is None:
-        query_name = f"cms_stateful_sink_{next(_SINK_SEQ)}"
     return _replay_events_stream(
         spark, sf_dir,
         "event_type string, ts timestamp, user_id bigint",
         lambda stream: cms_stateful(stream, depth=depth, width=width),
-        query_name,
+        "cms_stateful_sink",
     )
 
 
@@ -446,7 +430,6 @@ def run_kmv_multibatch_over_events(
     sf_dir: str,
     k: int = 64,
     n_batches: int = 6,
-    query_name: str | None = None,
 ) -> DataFrame:
     """Replay the events table through the streaming KMV sketch in
     ``n_batches`` REAL micro-batches — the state-evolution proof the
@@ -477,8 +460,6 @@ def run_kmv_multibatch_over_events(
     from ..sources.readers import read_table
     from ..sources.scratch import mkscratch
 
-    if query_name is None:
-        query_name = f"kmv_multibatch_sink_{next(_SINK_SEQ)}"
     base = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.col("ts").cast("timestamp").alias("ts"),
@@ -525,27 +506,21 @@ def run_kmv_multibatch_over_events(
             raise ValueError(
                 "run_kmv_multibatch_over_events: no events to replay"
             )
-        stream = (
-            spark.readStream.schema(
-                "event_type string, ts timestamp, user_id long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(scratch)
+        stream = read_event_stream(
+            stream_session(spark),
+            scratch,
+            schema="event_type string, ts timestamp, user_id long",
+            max_files_per_trigger=1,
         )
-        out = kmv_stateful(stream, k=k)
-        with scoped_shuffle_partitions(spark, 16):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        out = run_to_memory(
+            kmv_stateful(stream, k=k),
+            "kmv_multibatch_sink",
+            output_mode="append",
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(query_name).select(
+    return out.select(
         "event_type",
         "n_exactish",
         F.round("est_raw", 2).alias("kmv_estimate"),

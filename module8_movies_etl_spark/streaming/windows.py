@@ -10,9 +10,7 @@ aggregation's state grows forever.
 
 from __future__ import annotations
 
-import itertools
 import os
-from contextlib import contextmanager
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,34 +19,34 @@ from pyspark.sql import functions as F
 from ..sources.readers import _footer_schema
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int = 16):
-    """Scope ``spark.sql.shuffle.partitions`` around a streaming run.
+def stream_session(
+    spark: SparkSession, shuffle_partitions: int = 16
+) -> SparkSession:
+    """A child of ``spark`` for one stream run: ``spark.newSession()``
+    (same SparkContext, its own conf, catalog and query manager) with
+    every runtime-modifiable caller conf copied, plus
+    ``spark.sql.shuffle.partitions``. The runner builds its whole query
+    here, so its memory-sink view and its conf never reach the caller,
+    and a caller query planned from another thread meanwhile keeps the
+    caller's width. A query keeps the conf its session had at
+    ``start()``.
 
-    Stateful streams commit one state-store partition per shuffle
-    partition per micro-batch; under a default-conf session (200)
-    store-commit overhead dwarfs the data (measured 6× on a two-batch
-    replay). Every runner in the package passes 16: on the sf0.1
-    replays the six single-store stateful queries total 15.0 s at 32
-    vs 11.3 s at 16 (warm session), and the stream-stream joins —
-    FOUR stores per partition — drop 15.6 s → 12.0 s; 8 is flat vs
-    16, so 16 keeps the parallelism headroom. Production sizes this
-    to input rate; the replay's bound is store commits, not rows. The
-    conf is read at query START, so it must wrap the whole run and
-    restore after — unset if it was unset, not blindly re-set. This
-    is the ONE implementation of that save/set/restore discipline for
-    every streaming runner in the package.
+    Why 16: stateful streams commit one state-store partition per
+    shuffle partition per micro-batch; under a default-conf session
+    (200) store-commit overhead dwarfs the data (measured 6× on a
+    two-batch replay). On the sf0.1 replays the six single-store
+    stateful queries total 15.0 s at 32 vs 11.3 s at 16 (warm
+    session), and the stream-stream joins — FOUR stores per
+    partition — drop 15.6 s → 12.0 s; 8 is flat vs 16, so 16 keeps
+    the parallelism headroom. Production sizes this to input rate;
+    the replay's bound is store commits, not rows.
     """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return child
 
 
 def read_event_stream(
@@ -166,10 +164,11 @@ def session_window_counts(
 
 def run_to_memory(
     stream_df: DataFrame, query_name: str, output_mode: str = "complete"
-) -> None:
+) -> DataFrame:
     """Drive a streaming DataFrame to completion over the files
     currently present (``availableNow`` trigger) into an in-memory
-    table named ``query_name`` — the batch-parity test harness."""
+    table named ``query_name`` in the stream's own session, and return
+    that table — the batch-parity test harness."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
@@ -178,6 +177,7 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
+    return stream_df.sparkSession.table(query_name)
 
 
 def interval_join_streams(
@@ -224,8 +224,6 @@ def interval_join_streams(
     return l_wm.join(r_wm, cond, how)
 
 
-_HOP_SEQ = itertools.count()
-
 # No-drop watermark delay (hours) shared by the finite-replay
 # stream-stream interval joins: large enough that no real event in
 # the test tables' time span is ever dropped, and the single source
@@ -268,7 +266,7 @@ def run_hopping_over_events(
     drops past it.
     """
     stream = read_event_stream(
-        spark,
+        stream_session(spark),
         os.path.join(sf_dir, "events.parquet"),
         schema="event_type string, ts timestamp, value double",
     ).withColumn("value", F.col("value").cast("decimal(28,6)"))
@@ -286,10 +284,7 @@ def run_hopping_over_events(
             "total_value",
         )
     )
-    sink = f"stream_hopping_{next(_HOP_SEQ)}"
-    with scoped_shuffle_partitions(spark, 16):
-        run_to_memory(agg, sink, output_mode="complete")
-    return spark.table(sink)
+    return run_to_memory(agg, "stream_hopping", output_mode="complete")
 
 
 def run_session_windows_over_events(
@@ -309,7 +304,7 @@ def run_session_windows_over_events(
     microsecond arithmetic.
     """
     stream = read_event_stream(
-        spark,
+        stream_session(spark),
         os.path.join(sf_dir, "events.parquet"),
         schema="user_id bigint, ts timestamp",
     )
@@ -327,10 +322,7 @@ def run_session_windows_over_events(
             "n_events",
         )
     )
-    sink = f"stream_sessions_{next(_HOP_SEQ)}"
-    with scoped_shuffle_partitions(spark, 16):
-        run_to_memory(agg, sink, output_mode="complete")
-    return spark.table(sink)
+    return run_to_memory(agg, "stream_sessions", output_mode="complete")
 
 
 def ensure_ij_scratches(
@@ -438,8 +430,9 @@ def run_interval_join_over_events(
     entry = ensure_ij_scratches(
         spark, sf_dir, left_type, right_type, upper_s
     )
+    child = stream_session(spark)
     sides = {
-        side: read_event_stream(spark, scratch, schema=schema)
+        side: read_event_stream(child, scratch, schema=schema)
         for side, (scratch, schema) in entry.items()
     }
     left = sides["l"].select(
@@ -460,15 +453,13 @@ def run_interval_join_over_events(
         (F.unix_micros(F.col("r.r_ts")) - F.unix_micros(F.col("l.l_ts")))
         .alias("delta_us"),
     )
-    sink = f"stream_ij_{next(_HOP_SEQ)}"
     # A stream-stream join commits FOUR state stores per shuffle
     # partition per micro-batch (keyed + key-with-index on each
     # side), so partition count multiplies commit overhead twice
     # over. Measured on the sf0.1 replay (leftOuter, warm session):
-    # 32 partitions → 15.6 s, 16 → 12.0 s, 8 → 12.3 s — hence the
-    # package-wide 16 (see scoped_shuffle_partitions).
-    with scoped_shuffle_partitions(spark, 16):
-        run_to_memory(joined, sink, output_mode="append")
+    # 32 partitions → 15.6 s, 16 → 12.0 s, 8 → 12.3 s — the child
+    # session's default 16 (see stream_session).
+    out = run_to_memory(joined, "stream_ij", output_mode="append")
     # The sentinels can never emit (their horizons stay past the final
     # watermark), but exclude them defensively — and do it on the
     # MATERIALIZED batch table, never inside the streaming plan: a
@@ -476,4 +467,4 @@ def run_interval_join_over_events(
     # on the preserved side, silently deleting the sentinel before it
     # can advance the watermark (observed: the outer join reverted to
     # the un-sentineled 2/3 emission).
-    return spark.table(sink).filter(F.col("user_id") >= 0)
+    return out.filter(F.col("user_id") >= 0)

@@ -269,7 +269,8 @@ def test_recursive_tree_depth_matches_model(spark, sf_dir):
 
 def test_udtf_matches_native_chunks(spark):
     """The UDTF extension point must agree row-for-row with the native
-    transform/posexplode chunk expression it duplicates."""
+    transform/posexplode chunk expression it duplicates, and leave the
+    session catalog as it found it."""
     from module8_movies_etl_spark.operators import text as textops
     from module8_movies_etl_spark.operators.udtf_ext import chunk_rows_udtf
 
@@ -290,7 +291,9 @@ def test_udtf_matches_native_chunks(spark):
         )
     )
     native = df.select("doc_id", F.posexplode(chunks).alias("pos", "chunk"))
+    tables = spark.catalog.listTables()
     via_udtf = chunk_rows_udtf(df, "doc_id", "text")
+    assert spark.catalog.listTables() == tables
     assert sorted(map(tuple, native.collect())) == sorted(
         map(tuple, via_udtf.collect())
     )

@@ -9,7 +9,11 @@ slow-path API usage by hand; these pins make that audit mechanical:
 - ``.toPandas()``, ``.rdd`` access, and row-at-a-time UDF
   registration (``F.udf`` / ``@udf``) are banned outright in engine
   sources (the Python surfaces are Arrow mapInPandas /
-  applyInPandas / pandas UDAF / UDTF).
+  applyInPandas / pandas UDAF / UDTF);
+- session writes (``.conf.set`` / ``.conf.unset`` and
+  ``createOrReplaceTempView``) are PINNED per file like the collects:
+  the package must not change its caller's conf or catalog, so the
+  only sites are the ones whose session is their own to write.
 
 Tests are exempt (they collect results to assert on them); only the
 package's own sources are swept.
@@ -78,6 +82,19 @@ COLLECT_WHITELIST = {
     ),
 }
 
+# file (relative to the package) -> (allowed session writes, reason)
+SESSION_WRITE_WHITELIST = {
+    "plans/sql_api.py": (
+        1,
+        "register_tables: registering the tables as views is its API",
+    ),
+    "streaming/windows.py": (
+        2,
+        "stream_session: the copied caller conf and the shuffle width, "
+        "both set on the child session it returns",
+    ),
+}
+
 BANNED = {
     ".toPandas(": "driver materialization of a distributed frame",
     ".rdd.": "RDD escape hatch — DataFrame/Catalyst only",
@@ -112,3 +129,21 @@ def test_banned_apis_absent_from_engine_sources():
             if needle in text:
                 hits.append(f"{path.relative_to(PKG)}: {needle} ({why})")
     assert not hits, hits
+
+
+def test_session_write_sites_are_pinned():
+    got: dict[str, int] = {}
+    for path in _sources():
+        n = len(
+            re.findall(
+                r"\.conf\.(?:set|unset)\(|createOrReplaceTempView",
+                path.read_text(),
+            )
+        )
+        if n:
+            got[str(path.relative_to(PKG))] = n
+    want = {k: n for k, (n, _) in SESSION_WRITE_WHITELIST.items()}
+    assert got == want, (
+        "session conf/view writes changed — a package function must not "
+        f"write its caller's session: got {got}, pinned {want}"
+    )

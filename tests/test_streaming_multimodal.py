@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-import pytest
+import threading
+import time
+
 from pyspark.sql import functions as F
 
 from module8_movies_etl_spark import streaming
@@ -10,7 +12,7 @@ from module8_movies_etl_spark.operators import multimodal
 from module8_movies_etl_spark.sources import read_table
 from module8_movies_etl_spark.streaming.windows import (
     run_to_memory,
-    scoped_shuffle_partitions,
+    stream_session,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -156,31 +158,90 @@ def test_event_replays_write_no_scratch(spark, tmp_path, monkeypatch):
     assert list(tmp_path.iterdir()) == []
 
 
-def test_scoped_shuffle_partitions_restores_caller_conf(spark):
-    """The caller's conf is unchanged after a scoped run: a value set
-    before comes back, also when the body raises, and a key unset
-    before is unset again."""
-    key = "spark.sql.shuffle.partitions"
+def test_stream_session_copies_caller_conf_and_sets_width(spark):
+    """A child carries a conf the caller set at runtime plus its own
+    shuffle width, and a stream started from it plans with that width
+    while the caller keeps its own."""
+    from module8_movies_etl_spark.streaming.dedup import dedup_stream
+
+    key, width = "spark.sql.ansi.enabled", "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
     try:
-        spark.conf.set(key, "7")
-        with scoped_shuffle_partitions(spark, 3):
-            assert spark.conf.get(key) == "3"
-        assert spark.conf.get(key) == "7"
-        with pytest.raises(RuntimeError, match="body failed"):
-            with scoped_shuffle_partitions(spark):
-                assert spark.conf.get(key) == "16"
-                raise RuntimeError("body failed")
-        assert spark.conf.get(key) == "7"
-        spark.conf.unset(key)
-        with scoped_shuffle_partitions(spark):
-            assert spark.conf.get(key) == "16"
-        assert spark.conf.get(key, None) is None
+        child = stream_session(spark)
+        assert child.conf.get(key) == "false"
+        assert child.conf.get(width) == "16"
+        stream = streaming.read_event_stream(
+            child, EVENTS, schema="user_id bigint, event_type string, ts timestamp"
+        )
+        q = (
+            dedup_stream(stream, ["user_id", "event_type"], delay="240 hours")
+            .writeStream.format("memory")
+            .queryName("stream_session_width")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        widths = {
+            op.numShufflePartitions
+            for p in q.recentProgress
+            for op in p.stateOperators
+        }
+        assert widths == {16}
+        assert spark.conf.get(width) == "8"
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def test_stream_runners_never_write_the_caller_session(spark):
+    """While the stream runners and ``bpe_learn`` run, a second thread
+    only ever reads the caller's shuffle width, and afterwards the
+    caller's catalog holds no new view."""
+    from module8_movies_etl_spark.operators import text
+    from module8_movies_etl_spark.streaming.dedup import run_dedup_over_events
+    from module8_movies_etl_spark.streaming.windows import (
+        run_interval_join_over_events,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    tables = spark.catalog.listTables()
+    seen: set[str] = set()
+    done = threading.Event()
+
+    def sample():
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            time.sleep(0.005)
+
+    sampler = threading.Thread(target=sample)
+    sampler.start()
+    try:
+        assert run_dedup_over_events(spark, SF).count() > 0
+        assert run_interval_join_over_events(spark, SF).count() > 0
+        docs = read_table(spark, SF, "documents")
+        assert text.bpe_learn(docs, "text", top_words=50, n_merges=3).count() > 0
+    finally:
+        done.set()
+        sampler.join()
+    assert seen == {caller}
+    assert spark.catalog.listTables() == tables
+
+
+def test_pyds_stream_ticks_after_the_caller_registered_its_source(spark):
+    """``pyds_stream_ticks`` registers the grafttick source in its child
+    session also when the caller, the thread's active session, already
+    holds that registration."""
+    from module8_movies_etl_spark.plans.benchmark_queries import QUERIES
+    from module8_movies_etl_spark.sources import pyds
+
+    pyds.register_stream(spark)
+    rows = QUERIES["pyds_stream_ticks"](spark, SF).collect()
+    assert len(rows) == 10 and sum(r.n_rows for r in rows) == 2000
 
 
 def test_frame_sampling_fanout_and_determinism(spark):
