@@ -11,8 +11,9 @@ same way).
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from module8_movies_etl_spark.operators import stats, timeseries
@@ -25,6 +26,14 @@ SETTINGS = dict(
 
 # integer series with plenty of ties, 3..40 points
 SERIES = st.lists(st.integers(-50, 50), min_size=3, max_size=40)
+
+
+def _sql_round(x, nd):
+    """SQL ``round``: HALF_UP on the double's decimal repr, never
+    Python's binary-exact round (87.50625 → 87.5063, not 87.5062)."""
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-nd), ROUND_HALF_UP)
+    )
 
 
 def _rows(vals):
@@ -51,7 +60,7 @@ def _py_mann_kendall(vals):
         z = (s + 1) / math.sqrt(var)
     else:
         z = 0.0
-    return n, s, round(var, 6), round(z, 6)
+    return n, s, _sql_round(var, 6), _sql_round(z, 6)
 
 
 @given(vals=st.lists(st.integers(-50, 50), min_size=1, max_size=40))
@@ -91,13 +100,14 @@ def _py_changepoint(vals):
     gain = (sse_tot - sse_best) / sse_tot if sse_tot > 0 else 0.0
     return (
         k - 1,  # split_o = order value of the last left row (0-based)
-        round(sse_tot / n, 4),
-        round(sse_best / n, 4),
-        round(gain, 6),
+        _sql_round(sse_tot / n, 4),
+        _sql_round(sse_best / n, 4),
+        _sql_round(gain, 6),
     )
 
 
 @given(vals=SERIES)
+@example(vals=[0, 0, 0, -1, -31, -34] + [0] * 9 + [3])  # var_best ties at .5
 @settings(**SETTINGS)
 def test_changepoint_matches_bruteforce(spark, vals):
     df = spark.createDataFrame(_rows(vals), ["k", "o", "v"])
@@ -120,7 +130,7 @@ def _py_acf(vals, max_lag):
         if h >= n:
             continue  # no pairs → row absent
         num = sum(y[t] * y[t + h] for t in range(n - h))
-        out[h] = round(num / den, 6) if den > 0 else None
+        out[h] = _sql_round(num / den, 6) if den > 0 else None
     return out
 
 
