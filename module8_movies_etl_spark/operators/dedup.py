@@ -22,8 +22,11 @@ hash functions — so results are reproducible and oracle-verifiable.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .text import fingerprint, ws_trim
 
@@ -870,24 +873,27 @@ def connected_components(
     hundreds; cliquish near-dup corpora still finish in ≤4. Each round is one
     join + one aggregate, both on the node key — the same shuffle
     partitioning every round, so AQE reuses the exchange layout. The
-    loop is driver-side but the DATA never is: state is a
-    (node, label) table written to scratch parquet, which also
-    truncates lineage (a growing iterative plan otherwise re-executes
-    from round 0 and the optimizer chokes by round ~8). Convergence is
-    checked with a count of changed labels per round — a
-    data-dependent driver action, like the null-prune statistics
-    probe. (Chaining several lazy rounds between snapshots was tried
-    and measured 2x SLOWER: the tripled join plan defeats AQE
-    exchange reuse and optimizer time grows faster than the saved
+    loop is driver-side; the DATA is too only when the edge snapshot
+    fits under ``spark.sql.autoBroadcastJoinThreshold``
+    (``sources.scratch.take_small``): then the same rounds run in
+    numpy over the edge table read whole, and no round starts a Spark
+    job. Otherwise state is a (node, label) table written to scratch
+    parquet, which also truncates lineage (a growing iterative plan
+    otherwise re-executes from round 0 and the optimizer chokes by
+    round ~8). Convergence is checked with a count of changed labels
+    per round — a data-dependent driver action, like the null-prune
+    statistics probe. (Chaining several lazy rounds between snapshots
+    was tried and measured 2x SLOWER: the tripled join plan defeats
+    AQE exchange reuse and optimizer time grows faster than the saved
     driver round-trips.)
 
     ``pairs`` needs columns (id_a, id_b); ``nodes`` supplies every id
     (isolated docs keep themselves as cluster_id). Returns
     (id_col, cluster_id).
 
-    CONTRACT NOTE (r12, closing the r11 ADVICE item): ``nodes`` is
-    consumed up to three times lazily — two endpoint semi-joins on
-    the one-time edges write plus the final singles anti-join. Every
+    CONTRACT NOTE: ``nodes`` is consumed up to three times lazily —
+    two endpoint semi-joins on the one-time edges write plus the final
+    singles anti-join, on either path. Every
     in-repo caller passes a parquet-backed table (documents,
     customer, the ER snapshot), for which three column-pruned id
     scans are cheaper than an extra materialization; a caller whose
@@ -895,7 +901,7 @@ def connected_components(
     first.
     """
     from ..sources.readers import _footer_schema
-    from ..sources.scratch import mkscratch
+    from ..sources.scratch import mkscratch, take_small
 
     spark = pairs.sparkSession
     scratch = mkscratch("cc_labels_")
@@ -937,6 +943,14 @@ def connected_components(
         return spark.read.schema(_footer_schema(spark, p)).parquet(p)
 
     edges = reread(f"{scratch}/edges")
+    small = take_small(edges)
+    if small is not None:
+        t = edges.schema["src"].dataType
+        labels = spark.createDataFrame(
+            _min_labels_on_driver(small, max_iters),
+            T.StructType([T.StructField("node", t), T.StructField("label", t)]),
+        )
+        return _with_singles(labels, nodes, id_col)
     # Per-round label writes get NO explicit REBALANCE (unlike the
     # edges write above): every round's output is the tail of a
     # groupBy/join shuffle that AQE has already coalesced to
@@ -1055,9 +1069,42 @@ def connected_components(
         last = converged_at if converged_at is not None else max_iters + 1
         for j in range(last):
             shutil.rmtree(f"{scratch}/iter{j}", ignore_errors=True)
-    # Isolated nodes (no edge) re-enter here as their own singleton
-    # cluster — one anti-join at consumption time instead of riding
-    # through every propagation round.
+    return _with_singles(labels, nodes, id_col)
+
+
+def _min_labels_on_driver(edges: pa.Table, max_iters: int) -> pa.Table:
+    """``connected_components``' rounds in numpy over its (src, dst)
+    edge table, which holds both directions of every edge: per round
+    the minimum of the label, the neighbours' labels and the two
+    pointer jumps L(L(v)) and L(L(L(v))), until no label falls, within
+    the same ``max_iters`` bound and ``RuntimeError``. From the
+    identity labels, round 1 is the Spark path's ``least(src,
+    min(dst))``. Returns (node, label) over the edge endpoints."""
+    # nodes are positions in the sorted ids, so the minimum position
+    # is the minimum id; every dst is also a src
+    ids, src = np.unique(edges.column("src").to_numpy(), return_inverse=True)
+    dst = np.searchsorted(ids, edges.column("dst").to_numpy())
+    order = np.argsort(src, kind="stable")
+    dst = dst[order]
+    starts = np.flatnonzero(np.diff(src[order], prepend=-1))
+    label = np.arange(len(ids))
+    for _ in range(max(max_iters, 1)):  # round 1 always runs, as in Spark
+        jump = label[label]
+        new = np.minimum.reduce(
+            [label, np.minimum.reduceat(label[dst], starts), jump, label[jump]]
+        )
+        if (new == label).all():
+            return pa.table({"node": ids, "label": ids[label]})
+        label = new
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iters} rounds"
+    )
+
+
+def _with_singles(labels: DataFrame, nodes: DataFrame, id_col: str) -> DataFrame:
+    """Isolated nodes (no edge) re-enter as their own singleton
+    cluster — one anti-join at consumption time instead of riding
+    through every propagation round."""
     singles = nodes.select(F.col(id_col).alias("node")).join(
         labels.select("node"), "node", "left_anti"
     ).select("node", F.col("node").alias("label"))

@@ -15,8 +15,11 @@ dedup-decision toolbox (SURVEY.md §2.13).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _doubled_edges(pairs: DataFrame) -> DataFrame:
@@ -485,7 +488,10 @@ def kcore(
     depth they care about, and the result after round r is always a
     SUPERSET of the true k-core, shrinking monotonically.
 
-    Scale shape: the doubled edge list is snapshot once, then each
+    Scale shape: the doubled edge list is snapshot once. When the
+    snapshot fits under ``spark.sql.autoBroadcastJoinThreshold``
+    (``sources.scratch.take_small``), the rounds run in numpy over
+    the edge table read whole and start no Spark job. Otherwise each
     round is one degree aggregate + one semi-join of edges against
     surviving nodes ON BOTH ENDPOINTS — all keyed on the node, so the
     exchange layout repeats round over round. The edge frame is
@@ -497,11 +503,21 @@ def kcore(
 
     Returns ``(node, degree)`` of the surviving subgraph after
     ``n_rounds`` (degree = within-subgraph degree). An empty graph
-    or a fully-peeled one returns an empty frame.
+    or a fully-peeled one returns an empty frame. Pair ids are
+    non-NULL: a NULL is no node.
     """
-    from ..sources.scratch import snapshot
+    from ..sources.scratch import snapshot, take_small
 
     e = snapshot(_doubled_edges(pairs), prefix="kcore_edges_")
+    small = take_small(e)
+    if small is not None:
+        return pairs.sparkSession.createDataFrame(
+            _kcore_on_driver(small, k, n_rounds),
+            T.StructType([
+                T.StructField("node", e.schema["s"].dataType),
+                T.StructField("degree", T.LongType(), nullable=False),
+            ]),
+        )
     for _ in range(n_rounds):
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("_d"))
         keep = deg.filter(F.col("_d") >= k).select("s")
@@ -535,6 +551,24 @@ def kcore(
         .agg(F.count(F.lit(1)).alias("degree"))
         .select(F.col("s").alias("node"), F.col("degree").cast("long"))
     )
+
+
+def _kcore_on_driver(edges: pa.Table, k: int, n_rounds: int) -> pa.Table:
+    """``kcore``'s peel in numpy over its doubled (s, t) edge table: the
+    same ``n_rounds`` and the same early exit when no node falls below
+    ``k``. Returns (node, degree) of the surviving edges."""
+    # every t is also an s: the table holds both directions
+    ids, s = np.unique(edges.column("s").to_numpy(), return_inverse=True)
+    t = np.searchsorted(ids, edges.column("t").to_numpy())
+    alive = np.ones(len(s), dtype=bool)
+    for _ in range(n_rounds):
+        degree = np.bincount(s[alive], minlength=len(ids))
+        if (degree[degree > 0] >= k).all():
+            break
+        keep = degree >= k
+        alive &= keep[s] & keep[t]
+    degree = np.bincount(s[alive], minlength=len(ids))
+    return pa.table({"node": ids[degree > 0], "degree": degree[degree > 0]})
 
 
 def personalized_pagerank(

@@ -24,6 +24,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
 # Java's \s is ASCII-only ([ \t\n\x0B\f\r]) while Python str.split()
@@ -51,14 +52,12 @@ class ChunkSplit:
 def chunk_rows_udtf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, pos, chunk) rows via the UDTF lateral join.
 
-    The source frame is bound as a ``spark.sql`` argument, so it needs
-    no name in the session catalog and adds no view to it. Column
-    names are backtick-quoted in the SQL.
+    The UDTF is joined through the DataFrame API with the text column
+    as its outer reference, so nothing is registered in the session:
+    its function registry and catalog stay as they were.
     """
-    spark = df.sparkSession
-    spark.udtf.register("chunk_split", ChunkSplit)
-    return spark.sql(
-        f"SELECT s.`{id_col}`, c.pos, c.chunk "
-        f"FROM {{src}} s, LATERAL chunk_split(`{text_col}`) c",
-        src=df.select(id_col, text_col),
+    return (
+        df.select(id_col, text_col)
+        .lateralJoin(ChunkSplit(F.col(text_col).outer()))
+        .select(id_col, "pos", "chunk")
     )

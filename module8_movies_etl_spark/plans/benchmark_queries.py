@@ -1024,10 +1024,13 @@ def fuzzy_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[dedup-decision] The step that FINISHES fuzzy dedup: connected
     components over the verified Jaccard near-dup graph give every doc
     its cluster's min id; keeping rows where doc_id == cluster_id
-    deduplicates the corpus. Iterative min-label propagation
-    (operators.dedup.connected_components) — one join + one aggregate
-    per round, rounds = component diameter; the oracle replays the
-    transitive closure with a recursive CTE.
+    deduplicates the corpus. Iterative min-label propagation with
+    pointer jumping (operators.dedup.connected_components), rounds =
+    log(component diameter): in numpy on the driver when the edge
+    snapshot fits under ``spark.sql.autoBroadcastJoinThreshold`` (sf0.01,
+    48,832 edge rows), else one join + one aggregate per round (sf0.1,
+    4.6M edge rows); the oracle replays the transitive closure with a
+    recursive CTE.
     """
     d = read_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_similar_pairs(
@@ -5709,7 +5712,7 @@ GROUP BY pos
 def udtf_chunk_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[§2.12 UDF/UDTF surface, Spark-4 Python UDTF] The table-function
     extension point exercised end to end: a Python UDTF explodes each
-    document into 10-token chunks via a SQL ``LATERAL`` join, then a
+    document into 10-token chunks via a DataFrame ``lateralJoin``, then a
     native aggregate profiles the first five chunk positions. The
     UDTF's semantics are pinned row-for-row against the engine's
     NATIVE chunk expression (test_udtf_matches_native_chunks) — the
@@ -17812,25 +17815,28 @@ def pyds_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import pyds
     from ..sources.scratch import mkscratch
+    from ..streaming.windows import stream_session
 
-    pyds.register_stream(spark)
-    pyds.register_stream_sink(spark)
+    child = stream_session(spark)
+    pyds.register_stream(child)
+    pyds.register_stream_sink(child)
     scratch = mkscratch("stream_sink_")
     out = os.path.join(scratch, "out")
     os.makedirs(out, exist_ok=True)
     src = (
-        spark.readStream.format("grafttick")
+        child.readStream.format("grafttick")
         .option("rows", 2000)
         .option("batch", 500)
         .load()
     )
-    q = (
-        src.writeStream.format("graftstreamsink")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(scratch, "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+    with pyds.active_session(child):
+        q = (
+            src.writeStream.format("graftstreamsink")
+            .option("path", out)
+            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
     try:
         q.processAllAvailable()
     finally:
@@ -18491,9 +18497,12 @@ def kcore_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     real template farm" signal a dedup-decision pass can trust.
     Fixed rounds keep it SQL-replayable (one unrolled CTE layer per
     round); the result is a monotone-shrinking superset of the true
-    3-core. Per-round edge snapshots break the twice-referenced
-    lineage (degree + filter) that would otherwise re-execute the
-    prefix 2^8 times — both engines: the oracle MATERIALIZEs each
+    3-core. The doubled edge snapshot (4,152 rows at sf0.01, 66,082
+    at sf0.1) fits under ``spark.sql.autoBroadcastJoinThreshold``, so
+    the rounds peel in numpy on the driver; a graph past it peels in
+    Spark, with per-round edge snapshots that break the
+    twice-referenced lineage (degree + filter) that would otherwise
+    re-execute the prefix 2^8 times — the oracle MATERIALIZEs each
     layer for the same reason.
     """
     emb = read_table(spark, sf_dir, "embeddings")

@@ -35,6 +35,8 @@ the JVM scans.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -242,24 +244,33 @@ class GraftTickDataSource(DataSource):
         return GraftTickStreamReader(self.options)
 
 
-def register_stream(spark) -> None:
-    """Idempotently register the grafttick streaming source in ``spark``.
+@contextlib.contextmanager
+def active_session(spark):
+    """Make ``spark`` the thread's ACTIVE session inside the block, and
+    restore the previous one after it.
 
-    Spark refuses a registration whose name the thread's ACTIVE session
-    already has, even when ``spark`` lacks it: a child session (see
-    ``streaming.windows.stream_session``) of a caller that registered
-    the source could not register it. So ``spark`` is the active
-    session for the registration, and the previous one is restored."""
+    Spark resolves some Python data-source names in the active session,
+    not in the session of the call: it refuses a registration whose
+    name the active session already has, even when ``spark`` lacks it,
+    and a stream writer started in a child session (see
+    ``streaming.windows.stream_session``) finds only the sinks the
+    active session registered."""
     sessions = getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession")
     prev = sessions.getActiveSession()
     sessions.setActiveSession(spark._jsparkSession)
     try:
-        spark.dataSource.register(GraftTickDataSource)
+        yield
     finally:
         if prev.isDefined():
             sessions.setActiveSession(prev.get())
         else:
             sessions.clearActiveSession()
+
+
+def register_stream(spark) -> None:
+    """Idempotently register the grafttick streaming source in ``spark``."""
+    with active_session(spark):
+        spark.dataSource.register(GraftTickDataSource)
 
 
 # --------------------------------------------------------------------------
@@ -454,5 +465,7 @@ def committed_files(path: str) -> list[str]:
 
 
 def register_stream_sink(spark) -> None:
-    """Idempotently register the graftstreamsink streaming writer."""
-    spark.dataSource.register(GraftStreamSinkDataSource)
+    """Idempotently register the graftstreamsink streaming writer in
+    ``spark``."""
+    with active_session(spark):
+        spark.dataSource.register(GraftStreamSinkDataSource)

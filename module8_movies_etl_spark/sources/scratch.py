@@ -24,9 +24,10 @@ exits.
 Deployment note: the root is DRIVER-local, which is correct for this
 engine's local-mode target; a multi-node deployment must point
 ``SPARK_GRAFT_SCRATCH`` at a shared filesystem mounted on every node
-(executors write and read the snapshot; the driver reads only its
-footer, through a local path, to pin the re-read's schema), one whose
-``flock`` spans hosts (NFSv4) — else each host needs its own base.
+(executors write and read the snapshot; the driver reads its footers,
+through a local path, to pin the re-read's schema and to size it, and
+``take_small`` reads a small snapshot whole), one whose ``flock`` spans
+hosts (NFSv4) — else each host needs its own base.
 """
 
 from __future__ import annotations
@@ -39,7 +40,10 @@ import re
 import shutil
 import tempfile
 import threading
+from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 from .readers import _footer_schema
@@ -133,6 +137,35 @@ def snapshot(
     out.write.mode("overwrite").parquet(path)
     spark = df.sparkSession
     return spark.read.schema(_footer_schema(spark, path)).parquet(path)
+
+
+def take_small(snap: DataFrame) -> pa.Table | None:
+    """The rows of the parquet-backed snapshot ``snap`` as one Arrow
+    table read on the driver, or ``None`` when they do not fit.
+
+    They fit when their estimate — the row count summed from the
+    files' footers (no Spark job) × 8 bytes per column, exact for long
+    columns — is at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold``: the size up to which
+    Spark itself collects a join side to the driver to broadcast it.
+    A threshold ≤ 0 never fits. An iterative operator whose state fits
+    runs its rounds on the table instead of one Spark job or more per
+    round.
+
+    Once read, the snapshot's directory is removed: when a table comes
+    back, ``snap`` must not be used again."""
+    # the session's SQLConf parses the byte string ("67108864", "10MB")
+    sql_conf = snap.sparkSession._jsparkSession.sessionState().conf()
+    limit = sql_conf.autoBroadcastJoinThreshold()
+    if limit <= 0:
+        return None
+    files = [unquote(urlparse(u).path) for u in snap.inputFiles()]
+    rows = sum(pq.read_metadata(f).num_rows for f in files)
+    if rows * 8 * len(snap.columns) > limit:
+        return None
+    table = pq.read_table(files)
+    shutil.rmtree(os.path.dirname(files[0]), ignore_errors=True)
+    return table
 
 
 def local_snapshot(df: DataFrame) -> DataFrame:

@@ -10,6 +10,7 @@ from itertools import combinations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from module8_movies_etl_spark.operators import dedup, similarity
 from module8_movies_etl_spark.sources import read_table
@@ -319,17 +320,30 @@ def test_winnow_shared_run_guarantee(spark):
     assert all(2 not in p for p in pairs)
 
 
-def test_connected_components_match_union_find(spark):
+# (threshold, whether the edge snapshot is read on the driver)
+BOTH_PATHS = pytest.mark.parametrize(
+    "driver_reads, on_driver",
+    [(None, True), ("-1", False)],
+    ids=["driver", "distributed"],
+    indirect=["driver_reads"],
+)
+
+
+@BOTH_PATHS
+def test_connected_components_match_union_find(spark, driver_reads, on_driver):
     """Min-label propagation equals a pure-Python union-find over the
-    same pair graph, including isolated nodes and a multi-hop chain."""
+    same pair graph, including isolated nodes and a multi-hop chain,
+    with the same schema on the driver and the distributed path."""
     d = read_table(spark, SF, "documents").filter(F.col("doc_id") < 200)
     pairs = dedup.jaccard_similar_pairs(
         d, "doc_id", "text", block_cols=["lang"], threshold=0.5
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs, d, id_col="doc_id").collect()
-    }
+    cc = dedup.connected_components(pairs, d, id_col="doc_id")
+    assert driver_reads == [on_driver]
+    assert cc.schema == T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("cluster_id", T.LongType())]
+    )
+    got = {r.doc_id: r.cluster_id for r in cc.collect()}
 
     parent: dict[int, int] = {r.doc_id: r.doc_id for r in d.select("doc_id").collect()}
 
@@ -350,18 +364,39 @@ def test_connected_components_match_union_find(spark):
     assert any(v == k for k, v in want.items())
 
 
-def test_connected_components_chain(spark):
+@BOTH_PATHS
+def test_connected_components_chain(spark, driver_reads, on_driver):
     """A 5-node path (diameter 4) needs multiple propagation rounds —
-    pins the fixpoint loop, not just one-hop merging."""
+    pins the fixpoint loop, not just one-hop merging — and its ``int``
+    ids stay ``int`` on both paths."""
     nodes = spark.createDataFrame([(i,) for i in range(10, 15)] + [(99,)], "id int")
     pairs = spark.createDataFrame(
         [(10, 11), (11, 12), (12, 13), (13, 14)], "id_a int, id_b int"
     )
-    got = {
-        r.id: r.cluster_id
-        for r in dedup.connected_components(pairs, nodes, id_col="id").collect()
-    }
+    cc = dedup.connected_components(pairs, nodes, id_col="id")
+    assert driver_reads == [on_driver]
+    assert cc.schema == T.StructType(
+        [T.StructField("id", T.IntegerType()), T.StructField("cluster_id", T.IntegerType())]
+    )
+    got = {r.id: r.cluster_id for r in cc.collect()}
     assert got == {10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 99: 99}
+
+
+@BOTH_PATHS
+def test_connected_components_round_bound(spark, driver_reads, on_driver):
+    """A 16-node path with shuffled ids converges in exactly 7 rounds
+    on either path: ``max_iters=7`` labels it one component and
+    ``max_iters=6`` raises the same RuntimeError."""
+    import random
+
+    order = random.Random(3).sample(range(16), 16)
+    nodes = spark.createDataFrame([(i,) for i in order], "id long")
+    pairs = spark.createDataFrame(list(zip(order, order[1:])), "id_a long, id_b long")
+    got = dedup.connected_components(pairs, nodes, id_col="id", max_iters=7)
+    assert {r.cluster_id for r in got.collect()} == {0}
+    with pytest.raises(RuntimeError, match="did not converge in 6 rounds"):
+        dedup.connected_components(pairs, nodes, id_col="id", max_iters=6)
+    assert driver_reads == [on_driver] * 2
 
 
 def test_cosine_pq_recall_vs_bruteforce(spark):

@@ -9,6 +9,9 @@ from __future__ import annotations
 import datetime
 import tempfile
 
+import pytest
+from pyspark.sql import types as T
+
 from module8_movies_etl_spark.plans.benchmark_queries import (
     fellegi_sunter_linkage,
     iv_wald_estimate,
@@ -108,13 +111,22 @@ def test_iv_wald_hand_golden(spark):
     assert r.wald_cents == 4300.0
 
 
-def test_kcore_peels_cascade_to_hand_computed_core(spark):
+# 13 doubled edges are 26 rows of two longs: a 416-byte estimate, so a
+# 415-byte threshold is the largest that keeps them off the driver
+@pytest.mark.parametrize(
+    "driver_reads, on_driver",
+    [(None, True), ("-1", False), ("415", False), ("416", True)],
+    ids=["driver", "distributed", "415b-distributed", "416b-driver"],
+    indirect=["driver_reads"],
+)
+def test_kcore_peels_cascade_to_hand_computed_core(spark, driver_reads, on_driver):
     """K4 {1,2,3,4} + node 5 tied into {2,3,4}, then a tail 6-7-8
     engineered to peel over THREE cascading rounds (8 deg-1, then 7,
     then 6): the 3-core is exactly {1,2,3,4,5} with degrees
     3,4,4,4,3. One round only must return the documented monotone
     SUPERSET (6 survives round one at degree 3, reported at its
-    post-filter degree 2)."""
+    post-filter degree 2). The driver and the distributed path return
+    the same schema."""
     from module8_movies_etl_spark.operators.graphs import kcore
 
     edges = [
@@ -123,9 +135,15 @@ def test_kcore_peels_cascade_to_hand_computed_core(spark):
         (5, 6), (3, 6), (6, 7), (7, 8),                    # peeling tail
     ]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: r.degree for r in kcore(pairs, k=3, n_rounds=8).collect()}
+    core = kcore(pairs, k=3, n_rounds=8)
+    assert core.schema == T.StructType(
+        [T.StructField("node", T.LongType()),
+         T.StructField("degree", T.LongType(), nullable=False)]
+    )
+    got = {r.node: r.degree for r in core.collect()}
     assert got == {1: 3, 2: 4, 3: 4, 4: 4, 5: 3}
     sup = {r.node: r.degree for r in kcore(pairs, k=3, n_rounds=1).collect()}
+    assert driver_reads == [on_driver] * 2
     assert set(sup) == {1, 2, 3, 4, 5, 6}
     assert sup[6] == 2  # post-filter degree: 7 already peeled away
 

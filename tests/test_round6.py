@@ -270,7 +270,7 @@ def test_recursive_tree_depth_matches_model(spark, sf_dir):
 def test_udtf_matches_native_chunks(spark):
     """The UDTF extension point must agree row-for-row with the native
     transform/posexplode chunk expression it duplicates, and leave the
-    session catalog as it found it."""
+    session catalog and function registry as it found them."""
     from module8_movies_etl_spark.operators import text as textops
     from module8_movies_etl_spark.operators.udtf_ext import chunk_rows_udtf
 
@@ -292,8 +292,10 @@ def test_udtf_matches_native_chunks(spark):
     )
     native = df.select("doc_id", F.posexplode(chunks).alias("pos", "chunk"))
     tables = spark.catalog.listTables()
+    functions = [f for f in spark.catalog.listFunctions() if f.isTemporary]
     via_udtf = chunk_rows_udtf(df, "doc_id", "text")
     assert spark.catalog.listTables() == tables
+    assert [f for f in spark.catalog.listFunctions() if f.isTemporary] == functions
     assert sorted(map(tuple, native.collect())) == sorted(
         map(tuple, via_udtf.collect())
     )

@@ -12,6 +12,7 @@ import os
 import signal
 import subprocess
 import sys
+from urllib.parse import urlparse
 
 from module8_movies_etl_spark.sources.scratch import mkscratch
 
@@ -145,3 +146,21 @@ def test_snapshot_of_empty_frame_keeps_schema(spark, tmp_path, monkeypatch):
     out = snapshot(df)
     assert out.dtypes == df.dtypes
     assert out.count() == 0
+
+
+def test_take_small_fits_rows_under_the_threshold(spark, tmp_path, monkeypatch):
+    """100 longs estimate 800 bytes: a 799-byte threshold leaves the
+    snapshot where it is, an 800-byte one returns its rows and removes
+    its directory."""
+    from module8_movies_etl_spark.sources.scratch import snapshot, take_small
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    session = spark.newSession()
+    snap = snapshot(session.range(100))
+    path = os.path.dirname(urlparse(snap.inputFiles()[0]).path)
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "799")
+    assert take_small(snap) is None and os.path.isdir(path)
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "800")
+    table = take_small(snap)
+    assert sorted(table.column("id").to_pylist()) == list(range(100))
+    assert not os.path.exists(path)

@@ -10,6 +10,9 @@ slow-path API usage by hand; these pins make that audit mechanical:
   registration (``F.udf`` / ``@udf``) are banned outright in engine
   sources (the Python surfaces are Arrow mapInPandas /
   applyInPandas / pandas UDAF / UDTF);
+- whole-snapshot driver reads (``scratch.take_small``) are PINNED
+  per file like the collects, each bounded by the session's broadcast
+  threshold;
 - session writes (``.conf.set`` / ``.conf.unset`` and
   ``createOrReplaceTempView``) are PINNED per file like the collects:
   the package must not change its caller's conf or catalog, so the
@@ -82,6 +85,20 @@ COLLECT_WHITELIST = {
     ),
 }
 
+# file (relative to the package) -> (allowed scratch.take_small calls, bound)
+TAKE_SMALL_WHITELIST = {
+    "operators/dedup.py": (
+        1,
+        "connected components' edge snapshot: <= "
+        "spark.sql.autoBroadcastJoinThreshold, estimated from the footers",
+    ),
+    "operators/graphs.py": (
+        1,
+        "k-core's doubled edge snapshot: <= "
+        "spark.sql.autoBroadcastJoinThreshold, estimated from the footers",
+    ),
+}
+
 # file (relative to the package) -> (allowed session writes, reason)
 SESSION_WRITE_WHITELIST = {
     "plans/sql_api.py": (
@@ -118,6 +135,19 @@ def test_collect_sites_are_pinned_with_bounds():
         "driver-side .collect() sites changed — audit the new/removed "
         f"site's boundedness and update the whitelist: got {got}, "
         f"pinned {want}"
+    )
+
+
+def test_driver_snapshot_reads_are_pinned_with_bounds():
+    got: dict[str, int] = {}
+    for path in _sources():
+        n = len(re.findall(r"(?<!def )\btake_small\(", path.read_text()))
+        if n:
+            got[str(path.relative_to(PKG))] = n
+    want = {k: n for k, (n, _) in TAKE_SMALL_WHITELIST.items()}
+    assert got == want, (
+        "driver-side snapshot reads changed — audit the new/removed "
+        f"site's bound and update the whitelist: got {got}, pinned {want}"
     )
 
 

@@ -295,3 +295,18 @@ def test_spectral_tone_features_closed_form_and_robustness():
     g = spectral_wav_features(make_wav(5))
     assert 1 <= g["dominant_bin"] <= g["n_samples"] // 2
     assert g["power"] > 0
+
+
+def test_pyds_stream_sink_leaves_the_caller_data_sources_as_they_were(spark):
+    """``pyds_stream_sink`` registers its grafttick source and
+    graftstreamsink writer in its child session, so its caller's
+    data-source registry still lacks both."""
+    from module8_movies_etl_spark.plans.benchmark_queries import QUERIES
+
+    caller = spark.newSession()
+    registry = caller._jsparkSession.sessionState().dataSourceManager()
+    names = ("grafttick", "graftstreamsink")
+    assert not any(registry.dataSourceExists(n) for n in names)
+    rows = QUERIES["pyds_stream_sink"](caller, SF).collect()
+    assert len(rows) == 10 and sum(r.n_rows for r in rows) == 2000
+    assert not any(registry.dataSourceExists(n) for n in names)
