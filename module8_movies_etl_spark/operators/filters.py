@@ -10,40 +10,54 @@ the scan. The two operators that genuinely need engine code are here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
 
-def null_prune(df: DataFrame, threshold: float = 0.9) -> list[str]:
-    """P8 phase one: columns with < ``threshold`` null fraction.
+def null_stats(df: DataFrame) -> list[Column]:
+    """P8 statistics of ``df`` as aggregate columns: the row count
+    (``n``) and one null count per column (``c0``, ``c1``, … in schema
+    order). ONE aggregate computes all of them in a single pass over
+    the input (partial aggregation map-side, one row shuffled) — a
+    separate ``df.count()`` would double the scan cost, which is 2×
+    the whole query at 100 TB. The columns serve a ``select`` as well
+    as an ``Observation`` on a write that runs anyway
+    (``pipelines.movies_etl.wiki_transform``)."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.sum(F.col(f"`{c}`").isNull().cast("long")).alias(f"c{i}")
+            for i, c in enumerate(df.columns)
+        ],
+    ]
+
+
+def kept_columns(
+    columns: list[str], stats: dict[str, int] | Row, threshold: float = 0.9
+) -> list[str]:
+    """P8 keep rule: the ``columns`` with < ``threshold`` null fraction,
+    from ``null_stats``' values by name (an ``Observation``'s dict or
+    the aggregate's Row).
 
     The reference prunes 191 → 21 columns by comparing per-column null
     counts to ``0.9 * len(df)`` (reference ``challenge.py:110-111``).
-    Data-dependent → cannot be a Catalyst rule (plan-time schema);
-    instead ONE aggregate computes the row count AND every null count
-    in a single pass over the input (partial aggregation map-side, one
-    row shuffled) — a separate ``df.count()`` would double the scan
-    cost, which is 2× the whole query at 100 TB.
+    Data-dependent → cannot be a Catalyst rule (plan-time schema).
     """
-    total = "__row_count"
-    while total in df.columns:  # paranoia: never collide with user columns
-        total += "_"
-    row = df.select(
-        F.count(F.lit(1)).alias(total),
-        *[
-            F.sum(F.col(f"`{c}`").isNull().cast("long")).alias(c)
-            for c in df.columns
-        ],
-    ).first()
-    n = row[total]
+    n = stats["n"]
     if n == 0:
         # reference parity: with len(df)==0 the comparison is
         # null_count < 0 — false for every column, so the reference
         # keeps NONE (an all-columns early return would silently
         # diverge the degenerate schema)
         return []
-    return [c for c in df.columns if row[c] < threshold * n]
+    return [c for i, c in enumerate(columns) if stats[f"c{i}"] < threshold * n]
+
+
+def null_prune(df: DataFrame, threshold: float = 0.9) -> list[str]:
+    """P8 phase one: the columns of ``df`` that ``kept_columns`` keeps,
+    from one ``null_stats`` job."""
+    return kept_columns(df.columns, df.select(*null_stats(df)).first(), threshold)
 
 
 def prune_mostly_null_columns(df: DataFrame, threshold: float = 0.9) -> DataFrame:

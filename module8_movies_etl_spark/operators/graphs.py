@@ -499,14 +499,15 @@ def kcore(
     twice-referenced iterative-state trap, so each round's surviving
     edge list is snapshot before the next round reads it (same
     reasoning as ``dedup.connected_components``; a lazy chain here
-    re-executes the whole prefix 2^rounds times).
+    re-executes the whole prefix 2^rounds times), and the snapshot it
+    supersedes is discarded.
 
     Returns ``(node, degree)`` of the surviving subgraph after
     ``n_rounds`` (degree = within-subgraph degree). An empty graph
     or a fully-peeled one returns an empty frame. Pair ids are
     non-NULL: a NULL is no node.
     """
-    from ..sources.scratch import snapshot, take_small
+    from ..sources.scratch import discard, snapshot, take_small
 
     e = snapshot(_doubled_edges(pairs), prefix="kcore_edges_")
     small = take_small(e)
@@ -540,12 +541,13 @@ def kcore(
         )
         if (n_keep or 0) == n_prev:  # sum() is NULL on an empty graph
             break
-        e = snapshot(
+        prev, e = e, snapshot(
             e.join(keep, "s")
             .join(keep.select(F.col("s").alias("t")), "t")
             .select("s", "t"),
             prefix="kcore_round_",
         )
+        discard(prev)  # superseded: only the last round backs the result
     return (
         e.groupBy("s")
         .agg(F.count(F.lit(1)).alias("degree"))

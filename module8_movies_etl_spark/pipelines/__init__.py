@@ -1,5 +1,6 @@
 """Composed pipelines (SURVEY.md §7 phase 3): the reference's E1
-workload expressed as one lazy Spark DAG."""
+workload in one pass, with its two multiply-read stages written once
+to scratch snapshots."""
 
 from .movies_etl import (  # noqa: F401
     kaggle_transform,

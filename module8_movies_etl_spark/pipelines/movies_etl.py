@@ -1,15 +1,23 @@
-"""The reference pipeline (E1) as one lazy Spark DAG.
+"""The reference pipeline (E1) as two materialized stages.
 
 Re-expresses ``transform_and_load`` (reference ``challenge.py:38-334``)
-with the engine's operators. Stage map (SURVEY.md §3):
+with the engine's operators. Like the reference, one call makes one
+pass over the inputs: the deduped wiki frame and the merged frame are
+each written once to a scratch snapshot (``sources.scratch``), and
+everything downstream reads the snapshot instead of re-running the
+lineage — the P8 statistics ride on the wiki write as an
+``Observation``, and both output tables project the merged snapshot.
+Stage map (SURVEY.md §3):
 
 1. wiki transform   — P1 filter → C9 consolidation → F1 id extract →
-                      P9 dedup → P8 null-prune → F2-F11 parsing
+                      P9 dedup → [snapshot + P8 statistics] →
+                      P8 null-prune → F2-F11 parsing
 2. kaggle transform — P5 filter → C2-C5 casts
 3. rating histogram — A1 group count + V1 pivot + V2 rename
 4. merge            — J1 inner join (pandas suffixes) → P7 outlier
                       drop → C7 conflict fills ×7 → P2 projection →
-                      P4 rename → J2 broadcast left join → C8 fill
+                      P4 rename → J2 broadcast left join → C8 fill →
+                      [snapshot]
 
 Quirk decisions (SURVEY.md §4.3): dedup IS applied (Q7, notebook
 semantics); the P7 outlier filter runs BEFORE the C7 fills so it is
@@ -24,11 +32,12 @@ right side (the 45k-row histogram) is broadcast explicitly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import casts, cleaning, currency, dates, durations
 from ..operators import filters, pivot
+from ..sources import scratch
 
 # C9: the 20 language-title keys folded into alt_titles
 # (reference challenge.py:63-73)
@@ -113,7 +122,11 @@ def _consolidated(df: DataFrame) -> DataFrame:
 
 def wiki_transform(wiki: DataFrame, null_prune_threshold: float = 0.9) -> DataFrame:
     """Stage 2 (reference ``challenge.py:52-201``): filter, consolidate,
-    extract ids, dedup, prune, and parse the four messy columns."""
+    extract ids, dedup, prune, and parse the four messy columns.
+
+    NOTE: runs ONE write when called — the deduped frame's scratch
+    snapshot (``sources.scratch.snapshot``), which also collects the
+    null-prune statistics. The returned frame reads that snapshot."""
     # P1: has (Director | Directed by) AND imdb_link AND no episode count
     has_director = F.col("Director").isNotNull() if "Director" in wiki.columns else F.lit(False)
     if "Directed by" in wiki.columns:
@@ -131,8 +144,19 @@ def wiki_transform(wiki: DataFrame, null_prune_threshold: float = 0.9) -> DataFr
     # P9 (Q7: dedup kept, notebook semantics; first occurrence by url
     # as the stable file-order stand-in)
     movies = filters.dedup_by_key(movies, ["imdb_id"], order_by=["url"])
-    # P8: 90%-null column pruning (two-phase, data-dependent)
-    movies = filters.prune_mostly_null_columns(movies, null_prune_threshold)
+    # P8: 90%-null column pruning. The statistics ride on the deduped
+    # frame's one write as an Observation, and the parse stage reads
+    # the written snapshot, so the filter, consolidation and dedup run
+    # once. No rebalance: the frame is the tail of the dedup exchange,
+    # which AQE has already coalesced.
+    stats = Observation()
+    snap = scratch.snapshot(
+        movies.observe(stats, *filters.null_stats(movies)),
+        prefix="wiki_",
+        rebalance=False,
+    )
+    kept = filters.kept_columns(snap.columns, stats.get, null_prune_threshold)
+    movies = snap.select(*[F.col(f"`{c}`") for c in kept])
 
     # Box office / Budget (F2-F7): list-join → range collapse →
     # citation strip → two-form extract → parse
@@ -280,11 +304,27 @@ def run_pipeline(
     """E1 end-to-end: returns the three output tables the reference
     loads into Postgres (``challenge.py:312-322``) — movies,
     movies_ratings, and the raw ratings pass-through (Q1: timestamps
-    stay unix seconds)."""
+    stay unix seconds).
+
+    NOTE: runs TWO scratch snapshot writes when called (see
+    ``sources.scratch.snapshot``): the deduped wiki frame's
+    (``wiki_transform``) and the merged frame's. ``movies`` and
+    ``movies_ratings`` are projections of the merged snapshot, so
+    writing both reads it twice and re-runs none of the scans, joins
+    or the histogram. The wiki snapshot is removed once the merged one
+    is written; the merged one lives until the process exits, or until
+    a caller that runs many passes discards it
+    (``sources.scratch.discard``) after writing both tables."""
     wiki_t = wiki_transform(wiki)
     kaggle_t = kaggle_transform(kaggle)
     hist = rating_histogram(ratings)
-    movies = merge_movies(wiki_t, kaggle_t, hist)
+    # no rebalance: the merged frame's partitions already follow the
+    # Kaggle scan's file splits (the wiki side is broadcast) or an
+    # AQE-coalesced join exchange
+    movies = scratch.snapshot(
+        merge_movies(wiki_t, kaggle_t, hist), prefix="movies_", rebalance=False
+    )
+    scratch.discard(wiki_t)
     movies_only = movies.select(
         *[c for c in movies.columns if not c.startswith("rating_")]
     )

@@ -7791,14 +7791,19 @@ def pyds_graftgen_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging.
     """
     from ..sources import pyds
+    from ..streaming.windows import stream_session
 
-    pyds.register(spark)
-    g = (
-        spark.read.format("graftgen")
-        .option("rows", 2000)
-        .option("partitions", 8)
-        .load()
-    )
+    # registered and resolved in a child: the caller's data-source
+    # registry stays as it was
+    child = stream_session(spark)
+    pyds.register(child)
+    with pyds.active_session(child):
+        g = (
+            child.read.format("graftgen")
+            .option("rows", 2000)
+            .option("partitions", 8)
+            .load()
+        )
     return g.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.min("payload").alias("first_payload"),
@@ -12996,14 +13001,20 @@ def pyds_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import pyds
     from ..sources.scratch import mkscratch
+    from ..streaming.windows import stream_session
 
-    pyds.register_sink(spark)
+    # registered and written in a child (Spark looks the sink up in
+    # the active session): the caller's data-source registry stays as
+    # it was
+    child = stream_session(spark)
+    pyds.register_sink(child)
     scratch = mkscratch("manifest_sink_")
     out = os.path.join(scratch, "out")
-    d = read_table(spark, sf_dir, "documents").select(
+    d = read_table(child, sf_dir, "documents").select(
         text.fingerprint(F.col("text")).alias("f")
     )
-    d.write.format("graftsink").option("path", out).mode("append").save()
+    with pyds.active_session(child):
+        d.write.format("graftsink").option("path", out).mode("append").save()
     m = spark.read.json(os.path.join(out, "manifest.json"))
     return m.select(
         F.col("n_rows").cast("long").alias("n_rows"),

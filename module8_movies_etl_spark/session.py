@@ -121,6 +121,21 @@ def get_spark(
         # cluster deployment overrides with its fast local disks
         # ($SPARK_GRAFT_LOCAL_DIR or spark.local.dir in extra_conf).
         .config("spark.local.dir", _local_dir())
+        # With DataFrame debugging on (Spark's default), every wrapped
+        # Column/DataFrame call first captures its Python call site:
+        # extra Py4J round trips per call (the active-session lookup, a
+        # conf read, setting and clearing the JVM-side origin), plus a
+        # failed ``import ipykernel`` wherever IPython is installed
+        # without it. Measured on the ETL benchmark's seed-41 inputs
+        # (two runs a side): the first ``wiki_transform`` build made
+        # 4,266-4,523 Py4J calls with it and 1,485-1,486 without, and
+        # ``run_pipeline`` 7,242-7,305 and 3,222.
+        # The cost: a runtime error's ``== DataFrame ==`` context names
+        # a JVM frame instead of the caller's ``file:line``.
+        # ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        # "true"}`` turns it back on; PySpark reads the setting once
+        # per process, from the session active at its first wrapped call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -103,7 +103,8 @@ class GraftGenDataSource(DataSource):
 
 def register(spark) -> None:
     """Idempotently register the source on a session."""
-    spark.dataSource.register(GraftGenDataSource)
+    with active_session(spark):
+        spark.dataSource.register(GraftGenDataSource)
 
 
 # ---------------------------------------------------------------------------
@@ -185,7 +186,8 @@ class ManifestSinkDataSource(DataSource):
 
 def register_sink(spark) -> None:
     """Idempotently register the sink on a session."""
-    spark.dataSource.register(ManifestSinkDataSource)
+    with active_session(spark):
+        spark.dataSource.register(ManifestSinkDataSource)
 
 
 # --------------------------------------------------------------------------
@@ -252,7 +254,7 @@ def active_session(spark):
     Spark resolves some Python data-source names in the active session,
     not in the session of the call: it refuses a registration whose
     name the active session already has, even when ``spark`` lacks it,
-    and a stream writer started in a child session (see
+    and a batch or stream writer started in a child session (see
     ``streaming.windows.stream_session``) finds only the sinks the
     active session registered."""
     sessions = getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession")

@@ -19,7 +19,7 @@ frees the lock in any pid namespace, so no live owner's root is taken
 for dead. The owner removes its root at exit (atexit); a forked child
 never removes its parent's. A snapshot reads its files lazily, with
 the schema pinned from their footer, so it lives until its process
-exits.
+exits, or until ``discard`` removes it once nothing reads it again.
 
 Deployment note: the root is DRIVER-local, which is correct for this
 engine's local-mode target; a multi-node deployment must point
@@ -164,8 +164,21 @@ def take_small(snap: DataFrame) -> pa.Table | None:
     if rows * 8 * len(snap.columns) > limit:
         return None
     table = pq.read_table(files)
-    shutil.rmtree(os.path.dirname(files[0]), ignore_errors=True)
+    discard(snap)
     return table
+
+
+def discard(snap: DataFrame) -> None:
+    """Remove the scratch dirs that hold the files ``snap`` reads: a
+    snapshot (or a frame built on one) that nothing will read again.
+    Only dirs under this process's root are removed, so a frame over
+    the caller's own files loses nothing. ``snap`` must not be used
+    afterwards."""
+    root = _process_root()
+    dirs = {os.path.dirname(unquote(urlparse(u).path)) for u in snap.inputFiles()}
+    for d in dirs:
+        if os.path.commonpath([root, d]) == root != d:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def local_snapshot(df: DataFrame) -> DataFrame:

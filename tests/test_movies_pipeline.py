@@ -4,10 +4,14 @@ semantics Q1-Q9) as assertions."""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 import pytest
 
+from module8_movies_etl_spark.operators import filters
 from module8_movies_etl_spark.pipelines import movies_etl
-from module8_movies_etl_spark.sources import read_csv, read_json_records
+from module8_movies_etl_spark.sources import read_csv, read_json_records, scratch
 
 from . import fixtures
 
@@ -171,3 +175,47 @@ class TestMergedOutput:
         assert _by_imdb(df, 5).vote_count == pytest.approx(500.0)
         assert dict(df.dtypes)["vote_count"] == "double"
         assert df.schema == outputs["movies_ratings"].schema
+
+
+class TestOneExecutionPerStage:
+    def test_outputs_read_only_the_live_merged_snapshot(self, inputs):
+        # both output tables are projections of ONE merged snapshot:
+        # writing them re-runs no JSON or CSV scan, and the wiki
+        # snapshot it was built from is gone once it is written
+        root = scratch._process_root()
+        before = set(os.listdir(root))
+        out = movies_etl.run_pipeline(*inputs)
+        files = [
+            unquote(urlparse(u).path)
+            for t in ("movies", "movies_ratings")
+            for u in out[t].inputFiles()
+        ]
+        assert files and all(f.endswith(".parquet") for f in files)
+        assert all(os.path.commonpath([root, f]) == root for f in files)
+        live = {os.path.relpath(os.path.dirname(f), root) for f in files}
+        assert len(live) == 1 and next(iter(live)).startswith("movies_")
+        assert set(os.listdir(root)) - before == live
+        assert out["movies_ratings"].count() == 8
+
+    def test_observed_keep_list_matches_null_prune(self, inputs, monkeypatch):
+        # the P8 statistics observed on the wiki snapshot's write keep
+        # the columns a separate null_prune job keeps on the same frame
+        kept, snaps = [], []
+        keep, snapshot = filters.kept_columns, scratch.snapshot
+
+        def kept_spy(*args):
+            kept.append(keep(*args))
+            return kept[-1]
+
+        def snapshot_spy(*args, **kwargs):
+            snaps.append(snapshot(*args, **kwargs))
+            return snaps[-1]
+
+        monkeypatch.setattr(filters, "kept_columns", kept_spy)
+        monkeypatch.setattr(scratch, "snapshot", snapshot_spy)
+        movies_etl.wiki_transform(inputs[0])
+        monkeypatch.undo()
+        (snap,) = snaps
+        assert kept == [filters.null_prune(snap)]
+        assert {"junk1", "junk2"} <= set(snap.columns)
+        assert not {"junk1", "junk2"} & set(kept[0])

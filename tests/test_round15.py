@@ -148,6 +148,37 @@ def test_kcore_peels_cascade_to_hand_computed_core(spark, driver_reads, on_drive
     assert sup[6] == 2  # post-filter degree: 7 already peeled away
 
 
+@pytest.mark.parametrize("driver_reads", ["-1"], ids=["distributed"], indirect=True)
+def test_kcore_keeps_only_its_live_snapshot(spark, driver_reads):
+    """The distributed peel discards each snapshot a later round
+    supersedes: after two calls, only the two snapshots that back the
+    results are left in the process's scratch root."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    from module8_movies_etl_spark.operators.graphs import kcore
+    from module8_movies_etl_spark.sources import scratch
+
+    edges = [
+        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+        (2, 5), (3, 5), (4, 5), (5, 6), (3, 6), (6, 7), (7, 8),
+    ]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    root = scratch._process_root()
+    before = set(os.listdir(root))
+    cores = [kcore(pairs, k=3, n_rounds=8), kcore(pairs, k=3, n_rounds=1)]
+    assert driver_reads == [False, False]
+    live = {
+        os.path.relpath(os.path.dirname(unquote(urlparse(u).path)), root)
+        for c in cores
+        for u in c.inputFiles()
+    }
+    assert set(os.listdir(root)) - before == live
+    assert len(live) == 2 and all(d.startswith("kcore_round_") for d in live)
+    assert {r.node for r in cores[0].collect()} == {1, 2, 3, 4, 5}
+    assert {r.node for r in cores[1].collect()} == {1, 2, 3, 4, 5, 6}
+
+
 def test_textrank_matches_pure_python_pagerank_replay(spark):
     """Constructed six-doc corpus -> pure-Python co-occurrence graph
     (adjacent canonical pairs, count >= 5, self-loops dropped) ->

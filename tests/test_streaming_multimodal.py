@@ -310,3 +310,21 @@ def test_pyds_stream_sink_leaves_the_caller_data_sources_as_they_were(spark):
     rows = QUERIES["pyds_stream_sink"](caller, SF).collect()
     assert len(rows) == 10 and sum(r.n_rows for r in rows) == 2000
     assert not any(registry.dataSourceExists(n) for n in names)
+
+
+def test_pyds_batch_entries_leave_the_caller_data_sources_as_they_were(spark):
+    """``pyds_graftgen_scan`` and ``pyds_manifest_sink`` register their
+    graftgen source and graftsink writer in a child session, so they
+    run on a caller that is not the thread's active session, and its
+    data-source registry still lacks both afterwards."""
+    from module8_movies_etl_spark.plans.benchmark_queries import QUERIES
+
+    caller = spark.newSession()
+    registry = caller._jsparkSession.sessionState().dataSourceManager()
+    names = ("graftgen", "graftsink")
+    assert not any(registry.dataSourceExists(n) for n in names)
+    shards = QUERIES["pyds_graftgen_scan"](caller, SF).collect()
+    assert sum(r.n_docs for r in shards) == 2000
+    (manifest,) = QUERIES["pyds_manifest_sink"](caller, SF).collect()
+    assert manifest.n_rows == read_table(caller, SF, "documents").count()
+    assert not any(registry.dataSourceExists(n) for n in names)
